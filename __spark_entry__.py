@@ -2169,7 +2169,7 @@ def oracle_sql() -> dict[str, str]:
                     '[ \t]+', ' ', 'g'),
                     e' ?\n ?', e'\n', 'g'),
                     e'\n{2,}', e'\n', 'g'),
-                    '^\s+|\s+$', '', 'g') AS text
+                    '^\\s+|\\s+$', '', 'g') AS text
                 FROM raw
             )
             SELECT doc_id, text, CAST(length(text) AS BIGINT) AS n_chars

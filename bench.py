@@ -139,7 +139,6 @@ def crawl_worker(cpus: int, n_pages: int | None = None) -> None:
             "crawl": {
                 "budget_override": 10**9,
                 "max_retries": 0,
-                "bloom_enabled": True,
                 "bloom_bits": 1 << 21,
                 "max_rounds": 4,
             }

@@ -54,12 +54,6 @@ from .rustcompat import parse_f64
 _WS = b" \t\r\n"  # quick-xml trim_text whitespace set
 
 
-def _strip_ns(name: bytes) -> bytes:
-    """Namespace strip: bytes after the first ':' (abcd_parser.rs:174-179)."""
-    i = name.find(b":")
-    return name[i + 1:] if i >= 0 else name
-
-
 def attr_values(attrs: bytes):
     """Raw (escaped) attribute VALUES of a start tag, in document order.
 

@@ -58,15 +58,3 @@ def dataset_listing(datasets: DataFrame, units: DataFrame, fields: AbcdFields) -
         "isGeoReferenced",
         "surrogate_key",
     )
-
-
-def point_wkt(lon, lat):
-    """WKT POINT construction, NULL unless both present
-    (database_sink.rs:659-679). Uses the rust_fmt pandas UDF so float
-    rendering matches the reference's Display output."""
-    from .csvsink import rust_fmt
-
-    return F.when(
-        lon.isNotNull() & lat.isNotNull(),
-        F.concat(F.lit("POINT("), rust_fmt(lon), F.lit(" "), rust_fmt(lat), F.lit(")")),
-    )

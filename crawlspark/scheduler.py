@@ -43,8 +43,9 @@ Scale notes:
   never passes through one task whole. Both phases are filters on eligible
   rows only, so the result is exactly the unsalted top-k.
 * the only driver-side loop is over rounds; everything inside a round is
-  DataFrame ops with one mapInPandas (extraction) and one optional vectorized
-  Bloom probe. Counters are computed with one aggregate per cached branch.
+  DataFrame ops with one mapInPandas (extraction) and one bucket-routed
+  prefilter probe (a cogroup). Counters are computed with one aggregate per
+  cached branch.
 """
 
 from __future__ import annotations
@@ -76,8 +77,6 @@ from .canonical import canonicalize_expr, host_expr, url_hash_expr
 from .extract import extract_pages, split_dataset_units
 from .fields import AbcdFields
 from .seen import (
-    PartitionedBloom,
-    PartitionedCuckoo,
     distributed_bloom_update,
     distributed_cuckoo_update,
     rank_and_key,
@@ -198,49 +197,11 @@ class Crawler:
         """Warehouse table of the seen-set prefilter ('bloom' or 'cuckoo')."""
         return self.settings.crawl.seen_filter
 
-    def _new_bloom(self) -> "PartitionedBloom | PartitionedCuckoo":
-        c = self.settings.crawl
-        if c.seen_filter == "cuckoo":
-            return PartitionedCuckoo(c.cuckoo_entries, c.cuckoo_slots, c.seen_buckets)
-        return PartitionedBloom(c.bloom_bits, c.bloom_hashes, c.seen_buckets)
-
-    def _bloom_probe_mode(self) -> str:
-        """'broadcast' (small filter: collect + ship whole) or 'routed'
-        (bucket-cogrouped probe; the filter never leaves the executors).
-        'auto' switches on the statically-known total filter size — at 10^10
-        URLs a useful filter is 10+ GB and MUST take the routed path."""
-        c = self.settings.crawl
-        if c.bloom_probe != "auto":
-            return c.bloom_probe
-        if c.seen_filter == "cuckoo":
-            total = c.cuckoo_entries * c.cuckoo_slots * 2 * c.seen_buckets
-        else:
-            total = (c.bloom_bits // 8 + 1) * c.seen_buckets
-        return "broadcast" if total <= c.bloom_broadcast_max_bytes else "routed"
-
-    def _bloom_from_warehouse(self):
-        """Current prefilter state in the representation the probe mode needs:
-        a driver PartitionedBloom/PartitionedCuckoo (broadcast mode) or the
-        warehouse DataFrame itself (routed mode — never collected)."""
+    def _committed_filter(self) -> DataFrame | None:
+        """The last committed prefilter table, or None before the first
+        commit. A lazy handle: the driver never collects or rebuilds it."""
         tname = self._filter_table
-        if self._bloom_probe_mode() == "routed":
-            return (
-                self.wh.read_state(self.spark, tname)
-                if self.wh.has_table(tname)
-                else None
-            )
-        flt = self._new_bloom()
-        if self.wh.has_table(tname):
-            rows = self.wh.read_state(self.spark, tname).collect()
-            if rows and tname == "cuckoo":
-                flt = PartitionedCuckoo.from_rows(
-                    [(r["bucket"], r["table"], r["m"], r["slots"], r["n_buckets"]) for r in rows]
-                )
-            elif rows:
-                flt = PartitionedBloom.from_rows(
-                    [(r["bucket"], r["bitmap"], r["bits"], r["k"], r["n_buckets"]) for r in rows]
-                )
-        return flt
+        return self.wh.read_state(self.spark, tname) if self.wh.has_table(tname) else None
 
     def _filter_update(self, new_hashes: DataFrame, prev_df, deletes: DataFrame | None = None):
         """This round's prefilter state from the previous state + adds
@@ -257,18 +218,16 @@ class Crawler:
         )
 
     def _load_state(self):
-        """(frontier, seen, bloom, next_key, next_round) from the last commit."""
+        """(frontier, seen, next_key, next_round) from the last commit."""
         last = self.wh.last_round()
         if last < 0:
             frontier = self._apply_debug_window(self._seed)
             seen = self.spark.createDataFrame([], schemas.SEEN)
-            fresh = None if self._bloom_probe_mode() == "routed" else self._new_bloom()
-            return frontier, seen, fresh, 1, 0
+            return frontier, seen, 1, 0
         frontier = self.wh.read_state(self.spark, "frontier", schemas.FRONTIER)
         seen = self.wh.read_state(self.spark, "seen", schemas.SEEN)
-        bloom = self._bloom_from_warehouse()
         mx = seen.agg(F.max("surrogate_key").alias("m")).collect()[0]["m"]
-        return frontier, seen, bloom, (mx or 0) + 1, last + 1
+        return frontier, seen, (mx or 0) + 1, last + 1
 
     def _apply_debug_window(self, seed: DataFrame) -> DataFrame:
         """The reference's skip/take debug window over the seed list
@@ -329,9 +288,8 @@ class Crawler:
         tname = self._filter_table
         empty_hashes = sp.createDataFrame([], "url_hash long")
         if self.settings.crawl.seen_filter == "cuckoo":
-            prev = self.wh.read_state(sp, tname) if self.wh.has_table(tname) else None
             filter_df = self._filter_update(
-                empty_hashes, prev, deletes=removed.select("url_hash")
+                empty_hashes, self._committed_filter(), deletes=removed.select("url_hash")
             )
         else:
             filter_df = self._filter_update(new_seen.select("url_hash"), None)
@@ -362,7 +320,7 @@ class Crawler:
         """Crawl until the frontier drains (or max_rounds). Resumable: picks up
         from the last committed round."""
         max_rounds = max_rounds or self.settings.crawl.max_rounds
-        frontier, seen, bloom, next_key, round_ = self._load_state()
+        frontier, seen, next_key, round_ = self._load_state()
         results: list[RoundResult] = []
         if frontier.isEmpty():  # only the resume/seed boundary needs a probe
             return results
@@ -374,8 +332,8 @@ class Crawler:
         self.spark.conf.set("spark.sql.adaptive.enabled", "false")
         try:
             for _ in range(max_rounds):
-                rr, frontier, seen, bloom, next_key = self.run_round(
-                    round_, frontier, seen, bloom, next_key
+                rr, frontier, seen, next_key = self.run_round(
+                    round_, frontier, seen, next_key
                 )
                 results.append(rr)
                 round_ += 1
@@ -391,13 +349,15 @@ class Crawler:
         round_: int,
         frontier: DataFrame,
         seen: DataFrame,
-        bloom: "PartitionedBloom | DataFrame | None",
         next_key: int,
-    ) -> tuple[RoundResult, DataFrame, DataFrame, "PartitionedBloom | DataFrame | None", int]:
+    ) -> tuple[RoundResult, DataFrame, DataFrame, int]:
         s = self.settings.crawl
         sp = self.spark
         tm = _Timer(round_)
         _pins: list = []
+        # the last committed prefilter: probed below, and the base of this
+        # round's filter update
+        bloom = self._committed_filter()
 
         base = enrich(frontier)
 
@@ -423,12 +383,11 @@ class Crawler:
         w_dup = Window.partitionBy("curl").orderBy(*[F.col(c).asc() for c in ORDER])
         base = base.withColumn("dup_rn", F.row_number().over(w_dup))
 
-        # 3. seen-set membership (bloom-routed exact confirm, seen.py) —
-        # `bloom` is a driver PartitionedBloom (broadcast probe, small
-        # filters) or the warehouse DataFrame (bucket-routed cogroup probe,
-        # the 10^10-URL path; settings.bloom_probe)
+        # 3. seen-set membership (prefilter + exact confirm, seen.py) — the
+        # committed filter table is probed bucket-routed: each batch bucket
+        # is cogrouped with only its own bitmap row, on the executors
         base = split_new_vs_seen(
-            base, seen, bloom if s.bloom_enabled else None,
+            base, seen, bloom,
             bloom_buckets=s.seen_buckets,
             keep=_pins,
         ).persist()
@@ -476,7 +435,7 @@ class Crawler:
             defer_salt = elig.filter(F.lit(False))
             defer_host = defer_salt
         else:
-            salt_n = s.salt_partitions or int(sp.conf.get("spark.sql.shuffle.partitions"))
+            salt_n = int(sp.conf.get("spark.sql.shuffle.partitions"))
             w_salt = Window.partitionBy(
                 "chost", F.pmod(F.col("url_hash"), F.lit(salt_n))
             ).orderBy(*[F.col(c).asc() for c in ORDER])
@@ -764,17 +723,7 @@ class Crawler:
         # the commit's parallel write wave.
         tm.lap("pre-bloom")
         tname = self._filter_table
-        if self.wh.has_table(tname):
-            prev_bloom_df = self.wh.read_state(sp, tname)
-        elif isinstance(bloom, DataFrame):
-            prev_bloom_df = bloom
-        elif isinstance(bloom, PartitionedBloom) and bloom.bitmaps:
-            prev_bloom_df = sp.createDataFrame(bloom.to_rows(), schemas.BLOOM)
-        elif isinstance(bloom, PartitionedCuckoo) and bloom.tables:
-            prev_bloom_df = sp.createDataFrame(bloom.to_rows(), schemas.CUCKOO)
-        else:
-            prev_bloom_df = None
-        bloom_df = self._filter_update(new_seen.select("url_hash"), prev_bloom_df)
+        bloom_df = self._filter_update(new_seen.select("url_hash"), bloom)
         tm.lap("bloom plan")
 
         # sort-on-write (S21, the reference's post-load CLUSTER analog,
@@ -798,13 +747,10 @@ class Crawler:
         tm.lap("commit")
         for df in (base, elig, cand, statused, extracted, *_pins):
             df.unpersist()
-        # next round's bloom probe: rebuild from the committed bitmap table —
-        # correct on both the normal and the idempotent-re-commit path. In
-        # routed mode this is just the table handle (never collected).
-        bloom = self._bloom_from_warehouse()
 
         # re-read committed state so the next round's plan starts from files,
-        # not from an ever-growing lineage
+        # not from an ever-growing lineage (the next round reads the
+        # committed filter the same way, in its own first lines)
         frontier2 = self.wh.read_state(sp, "frontier", schemas.FRONTIER)
         seen2 = self.wh.read_state(sp, "seen", schemas.SEEN)
 
@@ -829,4 +775,4 @@ class Crawler:
             units=n_units,
             frontier_left=frontier_left,
         )
-        return rr, frontier2, seen2, bloom, next_key + n_fetched
+        return rr, frontier2, seen2, next_key + n_fetched

@@ -15,15 +15,13 @@ Engine design (north_rule):
   The final seen set is therefore exactly the reference's (BASELINE.json:2).
 * the Bloom filter is *partitioned* by hash range (``url_hash & (buckets-1)``)
   and BOTH sides honor it: the build is a per-bucket cogroup
-  (distributed_bloom_update) and the scale-path probe is too
-  (bloom_probe_routed) — at 10^10 URLs no task, executor, or the driver ever
-  holds more than one bucket's bitmap. Small filters (≤
-  settings.bloom_broadcast_max_bytes total) may instead ship whole via one
-  broadcast (bloom_filter_column) — fewer shuffles, local-mode default; the
-  scheduler picks per settings.bloom_probe.
-* dense key assignment avoids a global single-partition sort: per-host
-  row_number + host-offset cumulative sum (the host-count table is tiny), so
-  the only global ordering work is over n_hosts rows, not n_urls.
+  (distributed_bloom_update) and so is the probe (bloom_probe_routed /
+  cuckoo_probe_routed) — no task, executor, or the driver ever holds more
+  than one bucket's bitmap, so the same probe serves a test crawl and a
+  10^10-URL one. The driver never collects or rebuilds the filter.
+* dense key assignment avoids a global single-partition sort on large
+  batches: range-partitioned row_number + per-partition offset cumulative sum
+  (rank_and_key / dense_rank_range; the partition-count table is tiny).
 """
 
 from __future__ import annotations
@@ -33,7 +31,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
 
 _MASK = np.uint64(0xFFFFFFFFFFFFFFFF)
 
@@ -292,35 +289,6 @@ class PartitionedCuckoo:
         return cls(int(m), int(slots), int(nb), tables)
 
 
-def bloom_filter_column(bloom: PartitionedBloom | None, hash_col: str):
-    """Vectorized (Arrow-batched) Bloom probe as a BooleanType pandas UDF.
-
-    Returns a Column: true = *possibly* seen (must exact-confirm),
-    false = definitely new (skips the anti-join).  When no filter exists yet,
-    everything is "possibly seen" (falls back to the exact join). The bitmap
-    payload ships once per executor as a Spark broadcast, not in the task
-    closure.
-
-    LOCAL-MODE / SMALL-FILTER PATH ONLY: this ships the WHOLE filter to every
-    executor, which is wrong at 10^10 URLs (a useful bloom is 10+ GB). The
-    scheduler gates it behind ``CrawlSettings.bloom_probe`` — filters above
-    ``bloom_broadcast_max_bytes`` take ``bloom_probe_routed`` instead, where
-    each task sees only its bucket's bitmap.
-    """
-    if bloom is None or not getattr(bloom, "bitmaps", getattr(bloom, "tables", None)):
-        return F.lit(True)
-    cls = type(bloom)  # PartitionedBloom or PartitionedCuckoo — same contract
-    spark = __import__("pyspark").sql.SparkSession.getActiveSession()
-    bc = spark.sparkContext.broadcast(bloom.to_rows())
-
-    @F.pandas_udf(BooleanType())
-    def probe(h: pd.Series) -> pd.Series:
-        bl = cls.from_rows(bc.value)
-        return pd.Series(bl.might_contain(h.to_numpy(dtype=np.int64)))
-
-    return probe(F.col(hash_col))
-
-
 def bloom_probe_routed(
     keys: DataFrame, bloom_df: DataFrame, n_buckets: int, hash_col: str = "h"
 ) -> DataFrame:
@@ -477,7 +445,7 @@ def distributed_cuckoo_update(
 def split_new_vs_seen(
     batch: DataFrame,
     seen: DataFrame,
-    bloom: "PartitionedBloom | PartitionedCuckoo | DataFrame | None",
+    bloom: DataFrame | None,
     hash_col: str = "url_hash",
     url_col: str | None = None,
     bloom_buckets: int | None = None,
@@ -489,14 +457,13 @@ def split_new_vs_seen(
     confirmed with a left-semi/anti join pair expressed as a left join on the
     deduplicated seen keys — one shuffle over only the candidate subset.
 
-    ``bloom`` may be a driver-side PartitionedBloom / PartitionedCuckoo
-    (small filters: one broadcast, zero extra shuffles) or the filter
-    *DataFrame* straight from the warehouse (scale path: bucket-routed
-    cogroup probe, the filter is never collected or broadcast whole — pass
-    ``bloom_buckets``; a ``bitmap`` column means Bloom, a ``table`` column
-    means cuckoo).
+    ``bloom`` is the prefilter *DataFrame* straight from the warehouse (a
+    ``bitmap`` column means Bloom, a ``table`` column means cuckoo), probed
+    bucket-routed (bloom_probe_routed / cuckoo_probe_routed; pass
+    ``bloom_buckets``) — the filter is never collected or broadcast. With
+    ``None`` (no filter committed yet) every row goes to the exact confirm.
 
-    In routed mode the batch subtree feeds TWO consumers (the distinct probe
+    With a filter the batch subtree feeds TWO consumers (the distinct probe
     keys and the join's left side), so it is persisted here; the handle is
     appended to ``keep`` for the caller to unpersist after materialization
     (without it the enrich+dedup pipeline upstream ran twice per action).
@@ -519,7 +486,9 @@ def split_new_vs_seen(
         url_col = "curl" if "curl" in batch.columns else (
             "url" if "url" in batch.columns and "url" in seen.columns else None
         )
-    if isinstance(bloom, DataFrame):
+    if bloom is None:
+        maybe = batch.withColumn("_maybe", F.lit(True))
+    else:
         assert bloom_buckets, "bloom_buckets required for the routed probe"
         batch = batch.persist()
         if keep is not None:
@@ -538,8 +507,6 @@ def split_new_vs_seen(
             .withColumn("_maybe", F.coalesce(F.col("maybe"), F.lit(True)))
             .drop("_ph", "maybe")
         )
-    else:
-        maybe = batch.withColumn("_maybe", bloom_filter_column(bloom, hash_col))
     confirm_cols = [F.col(hash_col).alias("_seen_hash")]
     cond = F.col("_maybe") & (F.col(hash_col) == F.col("_seen_hash"))
     if url_col is not None:
@@ -614,8 +581,8 @@ def distributed_bloom_update(
     )
 
 
-def _cumsum_offsets(counts: DataFrame, sums: list[tuple[str, str]], key: str = "_pid") -> DataFrame:
-    """Exclusive prefix sums of ``sums`` columns ordered by ``key``, computed
+def _cumsum_offsets(counts: DataFrame, sums: list[tuple[str, str]]) -> DataFrame:
+    """Exclusive prefix sums of ``sums`` columns ordered by ``_pid``, computed
     with a triangular self-join — O(p²) pairs over a frame bounded by the
     shuffle-partition count (metadata-sized), never a global window.
 
@@ -625,7 +592,7 @@ def _cumsum_offsets(counts: DataFrame, sums: list[tuple[str, str]], key: str = "
     combined-counters job instead of overlapping with it — 20.2k → 17.6k
     urls/s at 16 cores on the 800k-page crawl. The lazy join's few extra tiny
     stages per consumer are cheaper than the lost overlap."""
-    strictly_before = F.col(f"_b.{key}") < F.col(f"_a.{key}")
+    strictly_before = F.col("_b._pid") < F.col("_a._pid")
     a, b = counts.alias("_a"), counts.alias("_b")
     aggs = [
         F.coalesce(F.sum(F.col(f"_b.{src}")), F.lit(0)).alias(dst)
@@ -633,7 +600,7 @@ def _cumsum_offsets(counts: DataFrame, sums: list[tuple[str, str]], key: str = "
     ]
     return (
         a.join(b, strictly_before, "left")
-        .groupBy(F.col(f"_a.{key}").alias(key))
+        .groupBy(F.col("_a._pid").alias("_pid"))
         .agg(*aggs)
     )
 
@@ -771,31 +738,3 @@ def rank_and_key(
         .drop("_pid", "_rn", "_frn", "_off", "_foff")
     )
     return out
-
-
-def dense_rank_two_level(
-    df: DataFrame,
-    part_col: str,
-    order_cols: list[str],
-    out_col: str = "seq",
-    offset: int = 0,
-) -> DataFrame:
-    """Dense 1-based global numbering by (part_col, *order_cols) without a
-    single-partition global sort.
-
-    Global order is (part_col asc, *order_cols asc). Implementation: per-part
-    row_number (parallel) + cumulative part offsets computed over the tiny
-    part-count table. Scale: the only single-partition window runs over
-    n_distinct(part_col) rows (hosts), not n_rows (URLs).
-    """
-    w_part = Window.partitionBy(part_col).orderBy(*[F.col(c).asc() for c in order_cols])
-    numbered = df.withColumn("_rn", F.row_number().over(w_part))
-
-    counts = df.groupBy(part_col).count()
-    offsets = _cumsum_offsets(counts, [("count", "_off")], key=part_col)
-
-    return (
-        numbered.join(F.broadcast(offsets), part_col)
-        .withColumn(out_col, (F.col("_rn") + F.col("_off") + F.lit(offset)).cast("long"))
-        .drop("_rn", "_off")
-    )

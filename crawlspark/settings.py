@@ -45,20 +45,14 @@ class CrawlSettings:
 
     default_host_budget: int = 8        # politeness: max fetches per host per round
     budget_override: int | None = None  # bulk/bench mode: ignore robots budgets
-    bloom_enabled: bool = True          # bloom prefilter before the exact anti-join
     max_retries: int = 1                # fetch-miss re-enqueue attempts (src/main.rs:190-203 analog)
     max_rounds: int = 64
-    bloom_bits: int = 1 << 20           # per-run bloom sizing (scaled up at 10^10)
+    bloom_bits: int = 1 << 20           # per-bucket bloom sizing (scaled up at 10^10)
     bloom_hashes: int = 5
-    seen_buckets: int = 32              # hash-range partitions of the seen table
-    salt_partitions: int = 0            # 0 = spark.sql.shuffle.partitions
-    # probe routing: 'broadcast' ships the whole filter to every executor
-    # (local-mode / small-filter only), 'routed' cogroups each batch bucket
-    # with ONLY its bitmap row (the 10^10-URL path: a useful bloom is 10+ GB
-    # there and must never be collected or broadcast whole), 'auto' picks by
-    # total filter size vs bloom_broadcast_max_bytes
-    bloom_probe: str = "auto"
-    bloom_broadcast_max_bytes: int = 64 << 20
+    # hash-range partitions of the seen prefilter: the probe cogroups each
+    # batch bucket with ONLY its own bitmap row, so no task, executor or the
+    # driver ever holds the whole filter (a useful bloom is 10+ GB at 10^10)
+    seen_buckets: int = 32
     # seen-set prefilter kind: 'bloom' (append-only; eviction = rebuild) or
     # 'cuckoo' (deletable — re-crawl eviction is a per-bucket fingerprint
     # delete, no rebuild; see seen.PartitionedCuckoo / Crawler.evict)

@@ -758,22 +758,6 @@ def sign_sketch_expr(vec, planes: int = 16, plane_offset: int = 0, dims: int = 6
     return _bind_once(proj, lambda pr: _bits_expr(pr, 0, planes))
 
 
-def banded_sketch_expr(vec, bands: int = 4, planes_per_band: int = 16, dims: int = 64):
-    """Array of ``bands`` independent sign-sketches (the MinHash-LSH banding
-    trick applied to random hyperplanes): a pair is a candidate if ANY band's
-    sketch matches exactly, so recall grows with bands while each band's
-    bucket stays selective — candidates remain O(near-dups), never
-    O(n²/2^planes). All bands' projections come from one aggregate pass,
-    evaluated once (_bind_once)."""
-    proj = _projections_expr(vec, bands * planes_per_band, 0, dims)
-    return _bind_once(
-        proj,
-        lambda pr: F.array(
-            *[_bits_expr(pr, b * planes_per_band, planes_per_band) for b in range(bands)]
-        ),
-    )
-
-
 def ann_lsh_topk(
     embeddings: DataFrame,
     query_vec_id: int = 0,
@@ -1118,8 +1102,10 @@ def _banded_sketch_sums(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(id, sketches) — banded_sketch_expr's values computed via posexplode +
-    COMPILED sum aggregates instead of the interpreted HOF projection fold
+    """(id, sketches) — ``bands`` independent sign-sketches (one
+    sign_sketch_expr per band, plane families laid end to end) computed via
+    posexplode + COMPILED sum aggregates instead of the interpreted HOF
+    projection fold
     (the simhash lesson: whole-stage codegen runs the same arithmetic 3-6x
     faster; A/B-measured 6.3 s → 2.0 s for the 4×16-plane sketch pass on the
     10x profiling corpus, zero sketch mismatches).

@@ -140,17 +140,26 @@ def test_listing_view(spark, full_run):
     assert any(r["link"].startswith("https://landing") for r in rows)
 
 
-def test_crawl_routed_bloom_matches_oracle(spark, synth_dfs, tmp_path):
-    """Scale-path probe (bucket-routed cogroup, no driver collect / whole-
-    filter broadcast) produces the exact same crawl as the broadcast probe."""
-    settings, wh, _ = run_crawler(
-        spark, synth_dfs, tmp_path / "whR",
-        overrides={"crawl": {"bloom_probe": "routed"}},
-    )
-    sim = oracle(settings)
+def test_driver_never_rebuilds_filter(spark, synth_dfs, tmp_path, monkeypatch):
+    """The prefilter is probed and updated on the executors only: neither a
+    first round nor a resumed one rebuilds it on the driver. Python workers
+    import their own, unpatched crawlspark.seen, so only a driver-side
+    rebuild trips the patch."""
+    from crawlspark import seen as seen_mod
+
+    def refuse(cls, rows):
+        raise AssertionError(f"driver rebuilt a {cls.__name__} from rows")
+
+    for cls in (seen_mod.PartitionedBloom, seen_mod.PartitionedCuckoo):
+        monkeypatch.setattr(cls, "from_rows", classmethod(refuse))
+    settings, _, res1 = run_crawler(spark, synth_dfs, tmp_path / "whN", max_rounds=1)
+    _, wh, res2 = run_crawler(spark, synth_dfs, tmp_path / "whN", max_rounds=1)
+    assert [r.round for r in res1 + res2] == [0, 1]
     log, seen, _ = collect_state(spark, wh)
-    assert log == sim.crawl_order
-    assert seen == sim.seen
+    sim = oracle(settings)
+    assert log == [t for t in sim.crawl_order if t[0] <= 1]
+    assert seen.items() <= sim.seen.items()
+    assert len(seen) == sum(r.fetched for r in res1 + res2)
 
 
 def test_kill_and_resume_exact(spark, synth_dfs, full_run, tmp_path):
@@ -192,8 +201,10 @@ def test_crawl_cuckoo_matches_oracle(spark, synth_dfs, tmp_path):
 
 @pytest.mark.parametrize("overrides", [
     {"crawl": {"seen_filter": "cuckoo"}},
-    {"crawl": {"seen_filter": "cuckoo", "bloom_probe": "routed"}},
     {"crawl": {}},  # bloom rebuild path
+    # few buckets: the victims share buckets, so one bucket's fingerprint
+    # deletes must not disturb its surviving entries
+    {"crawl": {"seen_filter": "cuckoo", "seen_buckets": 2}},
 ])
 def test_evict_recrawl(spark, synth_dfs, tmp_path, overrides):
     """Full re-crawl eviction loop: crawl → evict 3 urls (seen shrinks, they

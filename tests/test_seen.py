@@ -4,7 +4,7 @@ import numpy as np
 
 from pyspark.sql import functions as F
 
-from crawlspark.seen import PartitionedBloom, dense_rank_range, dense_rank_two_level, split_new_vs_seen
+from crawlspark.seen import PartitionedBloom, dense_rank_range, split_new_vs_seen
 
 
 def test_bloom_no_false_negatives():
@@ -32,6 +32,8 @@ def test_bloom_roundtrip_serialization():
 
 
 def test_split_new_vs_seen_exact(spark):
+    from crawlspark.seen import distributed_bloom_update
+
     batch = spark.createDataFrame(
         [(i, f"u{i}") for i in range(20)], ["url_hash", "url"]
     )
@@ -39,17 +41,19 @@ def test_split_new_vs_seen_exact(spark):
         [(i, f"u{i}", i, 0) for i in range(0, 20, 2)],
         ["url_hash", "url", "surrogate_key", "first_round"],
     )
-    bl = PartitionedBloom(1 << 10, 3, 2)
-    bl.add(np.arange(0, 20, 2, dtype=np.int64))
-    out = {r["url_hash"]: r["is_seen"] for r in split_new_vs_seen(batch, seen, bl).collect()}
+    bloom_df = distributed_bloom_update(seen.select("url_hash"), None, 1 << 10, 3, 2)
+    out = {
+        r["url_hash"]: r["is_seen"]
+        for r in split_new_vs_seen(batch, seen, bloom_df, bloom_buckets=2).collect()
+    }
     assert all(out[i] == (i % 2 == 0) for i in range(20))
     # and without bloom (exact-only path)
     out2 = {r["url_hash"]: r["is_seen"] for r in split_new_vs_seen(batch, seen, None).collect()}
     assert out == out2
 
 
-def test_routed_probe_matches_broadcast(spark):
-    """Bucket-routed cogroup probe == driver-side might_contain, bit for bit
+def test_routed_probe_matches_local(spark):
+    """Bucket-routed cogroup probe == local might_contain, bit for bit
     (same positions, same bitmaps; only the transport differs)."""
     from crawlspark import schemas
     from crawlspark.seen import bloom_probe_routed, distributed_bloom_update
@@ -127,9 +131,7 @@ def test_dense_rank_variants_agree(spark):
     data = [(f"h{i % 5}", i % 3, i, f"k{i:03d}") for i in range(97)]
     df = spark.createDataFrame(data, ["host", "priority", "i", "k"])
     a = dense_rank_range(df, ["host", "priority", "k"], out_col="seq", offset=10)
-    b = dense_rank_two_level(df, "host", ["priority", "k"], out_col="seq", offset=10)
-    ra, rb = _ranks(a.collect()), _ranks(b.collect())
-    assert ra == rb
+    ra = _ranks(a.collect())
     # dense, 1-based + offset, ordered by (host, priority, k)
     assert sorted(ra.values()) == list(range(11, 11 + 97))
     ordered = sorted(data, key=lambda t: (t[0], t[1], t[3]))
@@ -231,8 +233,8 @@ def test_cuckoo_roundtrip_serialization():
     assert ck2.might_contain(hs[2:]).all()
 
 
-def test_cuckoo_routed_probe_matches_broadcast(spark):
-    """Bucket-routed cuckoo cogroup probe == driver-side might_contain."""
+def test_cuckoo_routed_probe_matches_local(spark):
+    """Bucket-routed cuckoo cogroup probe == local might_contain."""
     from crawlspark import schemas
     from crawlspark.seen import (
         PartitionedCuckoo,
@@ -289,23 +291,22 @@ def test_cuckoo_distributed_delete(spark):
 
 
 def test_split_new_vs_seen_cuckoo(spark):
-    """split_new_vs_seen accepts cuckoo state in both transports."""
-    from crawlspark.seen import PartitionedCuckoo, distributed_cuckoo_update
+    """split_new_vs_seen accepts the cuckoo filter table (a ``table``
+    column) and agrees with the exact-only path."""
+    from crawlspark.seen import distributed_cuckoo_update
 
     batch = spark.createDataFrame([(i, f"u{i}") for i in range(20)], ["url_hash", "url"])
     seen = spark.createDataFrame(
         [(i, f"u{i}", i, 0) for i in range(0, 20, 2)],
         ["url_hash", "url", "surrogate_key", "first_round"],
     )
-    ck = PartitionedCuckoo(1 << 10, 4, 4)
-    ck.add(np.arange(0, 20, 2, dtype=np.int64))
-    out = {r["url_hash"]: r["is_seen"] for r in split_new_vs_seen(batch, seen, ck).collect()}
-    assert all(out[i] == (i % 2 == 0) for i in range(20))
     ck_df = distributed_cuckoo_update(seen.select("url_hash"), None, 1 << 10, 4, 4)
-    out2 = {
+    out = {
         r["url_hash"]: r["is_seen"]
         for r in split_new_vs_seen(batch, seen, ck_df, bloom_buckets=4).collect()
     }
+    assert all(out[i] == (i % 2 == 0) for i in range(20))
+    out2 = {r["url_hash"]: r["is_seen"] for r in split_new_vs_seen(batch, seen, None).collect()}
     assert out == out2
 
 
