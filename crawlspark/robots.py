@@ -47,8 +47,9 @@ def parse_robots_txt(
     ``User-agent: *\\nUser-agent: OtherBot\\nDisallow: /x`` disallows ``/x``
     for BOTH agents. A ``User-agent`` line after rule lines starts a fresh
     record (its match REPLACES the accumulator state rather than OR-ing).
-    Comments, blank lines, and colon-less garbage lines are transparent: they
-    neither close a start group nor change state. Bodies with no applicable
+    Comments, blank lines, colon-less garbage lines and ``Sitemap`` lines
+    (group-independent, RFC 9309 §2.3) are transparent: they neither close a
+    start group nor change state. Bodies with no applicable
     record yield an empty prefix array and NULL delay.
     """
     ua = user_agent.lower()
@@ -67,8 +68,10 @@ def parse_robots_txt(
         directive = F.lower(F.trim(F.element_at(parts, 1)))
         value = F.trim(F.element_at(parts, 2))  # NULL when no ':' present
         # comment-only / blank / colon-less lines are ignored entirely — they
-        # must not break a User-agent start group (RFC 9309 strips them)
-        ignorable = (line == "") | value.isNull()
+        # must not break a User-agent start group (RFC 9309 strips them);
+        # Sitemap lines are group-independent (RFC 9309 §2.3), so they are
+        # transparent to grouping too
+        ignorable = (line == "") | value.isNull() | (directive == "sitemap")
         is_ua = directive == "user-agent"
         ua_match = (F.lower(value) == ua) | (value == "*")
         new_active = (

@@ -270,7 +270,8 @@ class Crawler:
         ``requeue=True`` additionally re-enqueues the evicted URLs into the
         frontier (priority 0, provider 'recrawl') in the SAME commit, so the
         next ``run()`` re-fetches them — the full re-crawl loop. Commits a
-        new warehouse round (snapshots: seen + filter [+ frontier]) so
+        new warehouse round (snapshots: seen + filter [+ frontier]; the
+        shrunken seen set becomes a new base, since deltas only add rows) so
         eviction is atomic and resume-exact like any crawl round. Returns
         the number of evicted seen rows."""
         sp = self.spark
@@ -715,7 +716,6 @@ class Crawler:
                 .select(*ENRICHED_COLS)
             )
             new_frontier = new_frontier.unionByName(discovered)
-        new_seen_all = seen.unionByName(new_seen)
 
         # update the prefilter with this round's new hashes — EXECUTOR-side
         # per-bucket cogroup (seen.distributed_bloom_update / _cuckoo_update);
@@ -728,10 +728,13 @@ class Crawler:
 
         # sort-on-write (S21, the reference's post-load CLUSTER analog,
         # src/storage/database_sink.rs:408-489): committed dataset/unit files
-        # are ordered by surrogate_key; footer stats land in the manifest
+        # are ordered by surrogate_key; footer stats land in the manifest.
+        # The seen set is committed as a delta: only this round's new rows
+        # are written (the warehouse folds deltas into its base).
         self.wh.commit_round(
             round_,
-            snapshots={"frontier": new_frontier, "seen": new_seen_all, tname: bloom_df},
+            snapshots={"frontier": new_frontier, tname: bloom_df},
+            deltas={"seen": new_seen},
             appends={
                 "crawl_log": crawl_log,
                 "lineage": lineage,
@@ -740,8 +743,7 @@ class Crawler:
                 **extra_appends,
             },
             local_appends={"metrics": metrics_tbl},
-            stats_cols={"datasets": ["surrogate_key"], "units": ["surrogate_key"],
-                        "frontier": []},
+            stats_cols={"datasets": ["surrogate_key"], "units": ["surrogate_key"]},
         )
 
         tm.lap("commit")

@@ -143,17 +143,19 @@ def discovered_urls_stream(
         ).filter(~F.col("is_seen"))
         # cross-batch dedup: URLs already committed by EARLIER micro-batches
         # (the stream never folds its output into 'seen'). The committed
-        # hashes live in a compact SNAPSHOT table maintained alongside the
-        # appends — one hash-only state read per batch instead of re-reading
-        # and unioning EVERY historical append (which grew the per-batch
+        # hashes live in a compact hash-only STATE table maintained alongside
+        # the appends — one state read per batch instead of re-reading and
+        # unioning EVERY historical append (which grew the per-batch
         # anti-join plan linearly with stream lifetime — round-5 advice).
-        # Falls back to the appends union exactly once for warehouses from
-        # before this table existed, then snapshots it forward.
+        # Each batch commits only its own hashes as a delta. A warehouse from
+        # before this table existed falls back to the appends union exactly
+        # once, committed as the table's base.
         hashes_table = f"{out_table}_url_hashes"
-        if warehouse.has_table(hashes_table):
-            prior = warehouse.read_state(spark, hashes_table).select("url_hash")
-        elif warehouse.has_table(out_table):
+        legacy = not warehouse.has_table(hashes_table) and warehouse.has_table(out_table)
+        if legacy:
             prior = warehouse.read_appends(spark, out_table).select("url_hash")
+        elif warehouse.has_table(hashes_table):
+            prior = warehouse.read_state(spark, hashes_table).select("url_hash")
         else:
             prior = None
         if prior is not None:
@@ -162,15 +164,15 @@ def discovered_urls_stream(
             "url", "curl", "url_hash", "chost", "priority", "warc_ts",
             F.lit(batch_id).alias("batch_id"),
         ).dropDuplicates(["url_hash"]).persist()
-        # ^ persisted: the append write and the hash-snapshot union both read
-        # it inside one commit wave
+        # ^ persisted: the append write and the hash delta both read it
+        # inside one commit wave
         new_hashes = out.select("url_hash")
-        if prior is not None:
+        if legacy:  # the table's first delta, so it becomes the base
             new_hashes = prior.unionByName(new_hashes)
         # append via the warehouse so batch and streaming share the commit path
         round_ = _base_round() + int(batch_id) + 1
         committed = warehouse.commit_round(
-            round_, appends={out_table: out}, snapshots={hashes_table: new_hashes}
+            round_, appends={out_table: out}, deltas={hashes_table: new_hashes}
         )
         out.unpersist()
         if not committed:

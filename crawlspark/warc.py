@@ -194,15 +194,24 @@ def pages_from_warc(records: DataFrame) -> DataFrame:
     lang): the load edge for the crawl's Iceberg pages table. Non-response /
     errored records are dropped here — callers keep the records frame for
     quarantine accounting (S24 parity)."""
+    # WARC-Date is UTC (ISO 28500 §5.4), never the session time zone. A value
+    # with an explicit offset keeps it; any other is read as a zoneless
+    # TIMESTAMP_NTZ (every W3C-DTF precision) and rebuilt as a UTC instant
+    date = F.regexp_replace(F.col("warc_date"), "Z$", "")
+    ntz = date.try_cast("timestamp_ntz")
+    utc = F.make_timestamp(
+        F.year(ntz), F.month(ntz), F.dayofmonth(ntz), F.hour(ntz), F.minute(ntz),
+        F.extract(F.lit("SECOND"), ntz), F.lit("UTC"),
+    )
     return (
         records.filter(
             (F.col("warc_type") == "response") & F.col("error").isNull()
         )
         .select(
             F.col("target_uri").alias("url"),
-            F.try_to_timestamp(
-                F.regexp_replace(F.col("warc_date"), "Z$", "")
-            ).alias("warc_ts"),
+            F.when(date.rlike("[+-]\\d\\d:?\\d\\d$"), F.try_to_timestamp(date))
+            .otherwise(utc)
+            .alias("warc_ts"),
             F.col("payload").alias("html"),
             F.lit(None).cast("string").alias("text"),
             F.lit(None).cast("string").alias("lang"),

@@ -14,8 +14,25 @@ Guarantees used by the resume test:
 * a round is visible iff the manifest names it (partial writes are invisible)
 * ``commit_round`` is idempotent — re-committing a committed round is a no-op
   (reference analog: re-running after migrate_schema does not double-publish)
-* state tables ("snapshot") expose only the latest round; fact tables
-  ("append") expose the union of all committed rounds
+* fact tables ("append") expose the union of all committed rounds
+* a state table is one **base** directory plus a short list of **live
+  delta** directories (the manifest entry's ``live`` list, base first);
+  ``read_state`` returns their union. A ``snapshots=`` commit writes a new
+  base (``live = [round]``); a ``deltas=`` commit writes only the round's
+  new rows, so a state that only grows (the seen set) costs each round its
+  new work, not the table's age. An entry without ``live`` (written before
+  deltas existed) reads as its latest round, exactly as before.
+
+Deltas are folded by a rule with no setting, decided from the manifest
+before anything is written (so a crashed commit redoes the same fold): when
+the live deltas hold at least as many rows as the base, the commit folds
+base + deltas + the new rows into a new base; otherwise it adds one more
+live delta. A fold at least doubles the base, so each row is rewritten
+amortised O(1) times, and the deltas a reader unions (all but the newest)
+never hold more rows than the base.
+
+Folded directories are superseded, not deleted (expiry needs its own
+design for concurrent stream readers).
 """
 
 from __future__ import annotations
@@ -118,18 +135,25 @@ class Warehouse:
         round_: int,
         snapshots: dict[str, DataFrame] | None = None,
         appends: dict[str, DataFrame] | None = None,
+        deltas: dict[str, DataFrame] | None = None,
         local_appends: dict[str, "object"] | None = None,
         stats_cols: dict[str, list[str]] | None = None,
     ) -> bool:
         """Write all tables for a round, then publish atomically.
 
+        ``snapshots`` replace a state table with a new base; ``deltas`` add
+        only new rows to one (see the module docstring for the fold rule);
+        ``appends`` add a round to a fact table.
+
         ``local_appends`` maps table name → pyarrow Table for tiny
         driver-side facts (e.g. the 1-row metrics record) — written directly
         with pyarrow, no Spark job.
 
-        ``stats_cols`` maps table name → columns whose per-round min/max (plus
-        the row count) are recorded in the manifest from the parquet footers —
-        the ANALYZE analog of the reference's post-load step
+        Every state directory's row count (the fold rule's input) is
+        recorded in the manifest (``stats[round]["rows"]``) from the parquet
+        footers; ``stats_cols`` maps table name → columns whose per-round
+        min/max (plus the row count) are recorded too — the ANALYZE analog
+        of the reference's post-load step
         (src/storage/database_sink.rs:408-489); no data is re-read.
 
         The per-table Spark writes run CONCURRENTLY (one thread each): Spark's
@@ -144,15 +168,16 @@ class Warehouse:
         """
         with self._manifest_lock():
             return self._commit_round_locked(
-                round_, snapshots, appends, local_appends, stats_cols
+                round_, snapshots, appends, deltas, local_appends, stats_cols
             )
 
     def _commit_round_locked(
-        self, round_, snapshots, appends, local_appends, stats_cols
+        self, round_, snapshots, appends, deltas, local_appends, stats_cols
     ) -> bool:
         m = self.manifest()
         if round_ <= m["last_round"]:
             return False
+        stats_cols = stats_cols or {}
 
         import pyarrow.parquet as pq
 
@@ -175,14 +200,23 @@ class Warehouse:
         from concurrent.futures import ThreadPoolExecutor
 
         timing = os.environ.get("CRAWLSPARK_TIMING") == "1"
-        jobs = [
-            (kind, name, df)
-            for kind, tables in (("snapshot", snapshots or {}), ("append", appends or {}))
-            for name, df in tables.items()
-        ]
+        # (name, df, the state table's live list after this round; None for
+        # an append)
+        jobs = [(name, df, [round_]) for name, df in (snapshots or {}).items()]
+        jobs += [(name, df, None) for name, df in (appends or {}).items()]
+        for name, df in (deltas or {}).items():
+            assert name not in (snapshots or {}), f"{name}: both snapshot and delta"
+            t = m["tables"].get(name)
+            live = self._live(t)  # [] = no base yet: this delta becomes it
+            rows = [self._rows(name, t, r) for r in live]
+            if live and sum(rows[1:]) >= rows[0]:
+                # the fold rule: base + deltas + this delta become a new base
+                df = df.unionByName(self._read_rounds(df.sparkSession, name, live))
+                live = []
+            jobs.append((name, df, [*live, round_]))
 
         def write_one(job):
-            kind, name, df = job
+            name, df, live = job
             t0 = _time.time()
             final = self._round_dir(name, round_)
             staging = final.parent / f"_staging_r{round_:06d}"
@@ -197,7 +231,7 @@ class Warehouse:
                 import sys as _sys
 
                 _sys.stderr.write(f"[timing commit] {name}: {_time.time() - t0:.2f}s\n")
-            return kind, name, final
+            return name, final, live
 
         if len(jobs) > 1:
             with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
@@ -205,21 +239,31 @@ class Warehouse:
         else:
             written = [write_one(j) for j in jobs]
 
-        for kind, name, final in written:
-            t = m["tables"].setdefault(name, {"kind": kind, "rounds": []})
-            t["kind"] = kind
+        for name, final, live in written:
+            t = m["tables"].setdefault(name, {"rounds": []})
+            t["kind"] = "append" if live is None else "snapshot"
             if round_ not in t["rounds"]:
                 t["rounds"].append(round_)
-            cols = (stats_cols or {}).get(name)
-            if cols is not None:  # [] = row count only (from footers)
-                t.setdefault("stats", {})[str(round_)] = self._footer_stats(final, cols)
+            if live is not None:
+                t["live"] = live
+            if live is not None or name in stats_cols:
+                t.setdefault("stats", {})[str(round_)] = self._footer_stats(
+                    final, stats_cols.get(name, [])
+                )
         m["last_round"] = round_
         self._write_manifest(m)
         return True
 
+    def _rows(self, name: str, t: dict, round_: int) -> int:
+        st = t.get("stats", {}).get(str(round_))
+        if st is None:  # a directory committed before row counts were recorded
+            st = self._footer_stats(self._round_dir(name, round_), [])
+        return st["rows"]
+
     @staticmethod
     def _footer_stats(table_dir: Path, cols: list[str]) -> dict:
-        """Row count + per-column min/max from parquet footers only."""
+        """Row count (+ per-column min/max for ``cols``) from parquet footers
+        only."""
         import pyarrow.parquet as pq
 
         rows = 0
@@ -240,7 +284,7 @@ class Warehouse:
                         mins[c] = st.min
                     if c not in maxs or st.max > maxs[c]:
                         maxs[c] = st.max
-        return {"rows": rows, "min": mins, "max": maxs}
+        return {"rows": rows, "min": mins, "max": maxs} if cols else {"rows": rows}
 
     def write_once(self, name: str, df: DataFrame) -> None:
         """One-time dimension table (e.g. the (name, hash) translation table,
@@ -271,15 +315,26 @@ class Warehouse:
     def _round_dir(self, name: str, round_: int) -> Path:
         return self.path / name / f"r{round_:06d}"
 
+    @staticmethod
+    def _live(t: dict | None) -> list[int]:
+        """A state table's live directories, base first ([] if absent)."""
+        if not t or not t["rounds"]:
+            return []
+        return t.get("live") or [max(t["rounds"])]
+
+    def _read_rounds(self, spark: SparkSession, name: str, rounds) -> DataFrame:
+        return spark.read.parquet(*(str(self._round_dir(name, r)) for r in rounds))
+
     def read_state(
         self, spark: SparkSession, name: str, schema: StructType | None = None
     ) -> DataFrame:
-        """Latest committed snapshot of a state table (empty df if absent)."""
-        t = self.manifest()["tables"].get(name)
-        if not t or not t["rounds"]:
+        """A state table's committed contents — its base ∪ live deltas
+        (empty df if absent)."""
+        live = self._live(self.manifest()["tables"].get(name))
+        if not live:
             assert schema is not None, f"no snapshot for {name} and no schema"
             return SparkSession.getActiveSession().createDataFrame([], schema)
-        return spark.read.parquet(str(self._round_dir(name, max(t["rounds"]))))
+        return self._read_rounds(spark, name, live)
 
     def read_appends(
         self, spark: SparkSession, name: str, schema: StructType | None = None
@@ -289,8 +344,7 @@ class Warehouse:
         if not t or not t["rounds"]:
             assert schema is not None, f"no appends for {name} and no schema"
             return SparkSession.getActiveSession().createDataFrame([], schema)
-        dirs = [str(self._round_dir(name, r)) for r in sorted(t["rounds"])]
-        return spark.read.parquet(*dirs)
+        return self._read_rounds(spark, name, sorted(t["rounds"]))
 
     def has_table(self, name: str) -> bool:
         t = self.manifest()["tables"].get(name)

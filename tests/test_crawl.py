@@ -179,6 +179,81 @@ def test_kill_and_resume_exact(spark, synth_dfs, full_run, tmp_path):
     assert ua == ub
 
 
+def test_round_commits_only_its_seen_rows(spark, synth_dfs, tmp_path, monkeypatch):
+    """A crawl round writes its new seen rows as a delta: every seen/r{r}
+    directory committed as a delta holds exactly the rows first seen in
+    round r, never the base's; a directory committed as a base (the first
+    round, or a fold) holds the whole seen set of its round."""
+    import copy
+
+    published = []
+    write_manifest = Warehouse._write_manifest
+
+    def record(self, m):
+        write_manifest(self, m)
+        published.append(copy.deepcopy(m))
+
+    monkeypatch.setattr(Warehouse, "_write_manifest", record)
+    _, wh, results = run_crawler(spark, synth_dfs, tmp_path / "whD")
+    assert len(results) >= 3
+    fetched = {r.round: r.fetched for r in results}
+    n_deltas = 0
+    for m in published:
+        t, r = m["tables"].get("seen"), m["last_round"]
+        if not t or r not in t["rounds"]:  # not a crawl round's commit
+            continue
+        live = Warehouse._live(t)
+        assert live[-1] == r
+        rows = spark.read.parquet(str(wh.path / "seen" / f"r{r:06d}"))
+        if len(live) == 1:  # a base
+            covered = {q for q in fetched if q <= r}
+        else:
+            covered = {r}
+            n_deltas += 1
+        got = {x["first_round"] for x in rows.select("first_round").distinct().collect()}
+        assert got <= covered, (r, live, got)
+        assert rows.count() == sum(fetched[q] for q in covered), (r, live)
+    assert n_deltas >= 2
+
+
+def test_kill_across_fold_resumes_exact(spark, synth_dfs, full_run, tmp_path, monkeypatch):
+    """A crawl killed before the manifest swap of every round whose seen
+    commit folds its base and deltas into a new base resumes, with a fresh
+    Crawler each time, to exactly the uninterrupted crawl."""
+    _, wh_full, _ = full_run
+    write_manifest = Warehouse._write_manifest
+    killed = set()
+
+    def kill_on_fold(self, m):
+        before = Warehouse._live(self.manifest()["tables"].get("seen"))
+        after = Warehouse._live(m["tables"].get("seen"))
+        r = m["last_round"]
+        if len(before) > 1 and after == [r] and r not in killed:
+            killed.add(r)
+            raise RuntimeError(f"killed before the manifest swap of round {r}")
+        write_manifest(self, m)
+
+    monkeypatch.setattr(Warehouse, "_write_manifest", kill_on_fold)
+    wh_dir = tmp_path / "whF"
+    for _ in range(10):
+        try:
+            _, wh, _ = run_crawler(spark, synth_dfs, wh_dir)
+            break
+        except RuntimeError as e:
+            assert "killed before the manifest swap" in str(e)
+            spark.catalog.clearCache()  # the killed round's persisted frames
+    assert killed, "no round's seen commit folded"
+
+    a = collect_state(spark, wh_full)
+    b = collect_state(spark, wh)
+    assert a[0] == b[0]  # crawl order
+    assert a[1] == b[1]  # seen set + keys
+    assert a[2] == b[2]  # metrics
+    ua = sorted(map(tuple, wh_full.read_appends(spark, "units").collect()))
+    ub = sorted(map(tuple, wh.read_appends(spark, "units").collect()))
+    assert ua == ub
+
+
 def test_idempotent_recommit(spark, synth_dfs, tmp_path):
     _, wh, _ = run_crawler(spark, synth_dfs, tmp_path / "whC", max_rounds=1)
     pages, frontier, robots, cache_df = synth_dfs
@@ -224,6 +299,8 @@ def test_evict_recrawl(spark, synth_dfs, tmp_path, overrides):
         r["url"] for r in wh.read_state(spark, "seen", schemas.SEEN).collect()
     }
     assert seen_mid == set(seen_before) - set(victims)
+    # eviction deletes rows, so it commits the seen set as a new base
+    assert wh.manifest()["tables"]["seen"]["live"] == [wh.last_round()]
     # evicting urls that are not in the seen set is a no-op (and must NOT
     # delete colliding fingerprints / commit a round)
     last = wh.last_round()

@@ -387,6 +387,18 @@ def test_robots_parser_consecutive_user_agent_grouping(spark):
     assert mine["g1"] == ["/x"] and mine["g4"] == ["/a", "/b"] and mine["g5"] == ["/w"]
 
 
+def test_robots_parser_sitemap_line_keeps_start_group(spark):
+    """RFC 9309 §2.3: Sitemap lines are group-independent, so one between
+    two User-agent lines must not close the start group."""
+    from crawlspark.robots import parse_robots_txt
+
+    df = spark.createDataFrame(
+        [("h", "User-agent: *\nSitemap: https://h/s.xml\nUser-agent: other\nDisallow: /x")],
+        ["host", "body"],
+    )
+    assert list(parse_robots_txt(df).collect()[0]["disallow_prefixes"]) == ["/x"]
+
+
 def test_robots_parser_feeds_crawler(spark, tmp_path):
     """End-to-end wiring: parsed robots.txt rules drive the crawl loop —
     the disallowed prefix is enforced (robots_blocked counts match)."""

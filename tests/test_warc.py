@@ -83,6 +83,40 @@ def test_parse_warc_spark_and_pages(spark):
     assert (ts.year, ts.month, ts.day) == (2024, 3, 5)
 
 
+def test_pages_warc_date_is_utc(spark):
+    """WARC-Date is UTC whatever the session time zone; an explicit offset
+    (non-conforming, but seen in the wild) is kept, and a reduced-precision
+    value is still read as UTC."""
+    from pyspark.sql import functions as F
+
+    from crawlspark.warc import pages_from_warc, parse_warc
+
+    dates = {
+        "2024-01-02T03:04:05Z": 1704164645,
+        "2024-01-02T03:04:05.5Z": 1704164645,
+        "2024-01-02T03:04:05+01:00": 1704164645 - 3600,
+        "2024-01-02T03:04:05-0500": 1704164645 + 5 * 3600,
+        "2024-01-02T03:04Z": 1704164640,
+        "2024-01-02": 1704153600,
+        "2024-03-10T02:30:00Z": 1710037800,  # no such wall clock in New York
+    }
+    recs = [
+        {"url": f"https://a.org/{i}", "date": d, "body": f"<html>{i}</html>"}
+        for i, d in enumerate(dates)
+    ]
+    df = spark.createDataFrame([("f", encode_warc(recs))], ["path", "content"])
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        got = pages_from_warc(parse_warc(df, tasks=1)).select(
+            "url", F.unix_timestamp("warc_ts").alias("t")
+        ).collect()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+    by_url = {r["url"]: r["t"] for r in got}
+    assert by_url == {f"https://a.org/{i}": t for i, t in enumerate(dates.values())}
+
+
 def test_negative_content_length_quarantined():
     """A negative Content-Length must quarantine, not walk backwards onto
     the record's own magic and loop forever (review finding, round 5)."""

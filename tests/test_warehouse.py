@@ -87,6 +87,9 @@ def test_commit_round_footer_stats(spark, tmp_path):
     assert st["rows"] == 7
     assert st["min"]["surrogate_key"] == 1
     assert st["max"]["surrogate_key"] == 7
+    # a state directory's row count is recorded without stats_cols
+    wh.commit_round(1, snapshots={"state": df.limit(3)})
+    assert wh.manifest()["tables"]["state"]["stats"]["1"] == {"rows": 3}
 
 
 def test_committed_files_sorted(spark, tmp_path):
@@ -156,3 +159,93 @@ def test_concurrent_commits_serialize(tmp_path):
     # no registration lost to a concurrent read-modify-write
     assert sorted(epochs) == [f"ck{i}" for i in range(8)]
     assert all(epochs[k]["epoch"] == 1 for k in epochs)
+
+
+def _rows(spark, wh, name):
+    return sorted(tuple(r) for r in wh.read_state(spark, name).collect())
+
+
+def test_read_state_is_base_union_live_deltas(spark, tmp_path):
+    """A deltas= commit writes only its own rows; read_state returns the
+    base ∪ the live deltas, and a snapshots= commit resets to a new base."""
+    wh = Warehouse(tmp_path / "wh")
+
+    def df(*xs):
+        return spark.createDataFrame([(x,) for x in xs], ["x"])
+
+    assert wh.commit_round(0, deltas={"t": df(1, 2, 3)})  # no base yet: it is one
+    assert wh.manifest()["tables"]["t"]["live"] == [0]
+    assert wh.commit_round(1, deltas={"t": df(4)})
+    assert wh.manifest()["tables"]["t"]["live"] == [0, 1]
+    # the delta directory holds only the round's rows
+    delta_dir = tmp_path / "wh" / "t" / "r000001"
+    assert [tuple(r) for r in spark.read.parquet(str(delta_dir)).collect()] == [(4,)]
+    assert _rows(spark, wh, "t") == [(1,), (2,), (3,), (4,)]
+    assert wh.commit_round(2, snapshots={"t": df(9)})
+    assert wh.manifest()["tables"]["t"]["live"] == [2]
+    assert _rows(spark, wh, "t") == [(9,)]
+    assert wh.commit_round(3, deltas={"t": df(10)})
+    assert wh.manifest()["tables"]["t"]["live"] == [2, 3]
+    assert _rows(spark, wh, "t") == [(9,), (10,)]
+    # re-committing a committed round is a no-op, deltas included
+    before = wh.manifest()
+    assert wh.commit_round(3, deltas={"t": df(11)}) is False
+    assert wh.commit_round(2, deltas={"t": df(11)}) is False
+    assert wh.manifest() == before
+    assert _rows(spark, wh, "t") == [(9,), (10,)]
+
+
+def test_partial_delta_write_invisible_until_manifest(spark, tmp_path):
+    """A crashed delta write (directory renamed, manifest not swapped) is
+    invisible, and the next commit of that round replaces it."""
+    wh = Warehouse(tmp_path / "wh")
+    wh.commit_round(0, snapshots={"t": spark.createDataFrame([(1,)], ["x"])})
+    orphan = spark.createDataFrame([(7,), (8,)], ["x"])
+    orphan.write.mode("overwrite").parquet(str(tmp_path / "wh" / "t" / "r000001"))
+    assert wh.last_round() == 0
+    assert _rows(spark, wh, "t") == [(1,)]
+    assert wh.commit_round(1, deltas={"t": spark.createDataFrame([(2,)], ["x"])})
+    assert _rows(spark, wh, "t") == [(1,), (2,)]
+
+
+def test_delta_fold_rule_folds_base(spark, tmp_path):
+    """16-row base + 40 one-row deltas: the union always equals everything
+    committed, the deltas before the newest never hold as many rows as the
+    base, and the base is folded exactly when the deltas reach its size."""
+    wh = Warehouse(tmp_path / "wh")
+    committed = list(range(16))
+    base = spark.createDataFrame([(x,) for x in committed], ["x"])
+    wh.commit_round(0, snapshots={"t": base})
+    bases = []
+    for r in range(1, 41):
+        x = 100 + r
+        committed.append(x)
+        wh.commit_round(r, deltas={"t": spark.createDataFrame([(x,)], ["x"])})
+        t = wh.manifest()["tables"]["t"]
+        live = t["live"]
+        if len(live) == 1:
+            bases.append(r)
+        rows = [t["stats"][str(q)]["rows"] for q in live]
+        assert sum(rows[1:-1]) < rows[0], (r, live, rows)
+        assert _rows(spark, wh, "t") == [(x,) for x in sorted(committed)]
+    # the 17th delta finds 16 delta rows against the 16-row base: a 33-row
+    # base, which the remaining 23 deltas do not reach
+    assert bases == [17]
+    assert t["live"] == [17, *range(18, 41)]
+
+
+def test_manifest_without_live_reads_latest_round(spark, tmp_path):
+    """A warehouse written before deltas existed (no ``live``, no row
+    stats) reads its latest round, and the first delta commit on top of it
+    treats that round as the base."""
+    wh = Warehouse(tmp_path / "wh")
+    wh.commit_round(0, snapshots={"t": spark.createDataFrame([(1,)], ["x"])})
+    wh.commit_round(1, snapshots={"t": spark.createDataFrame([(2,), (3,)], ["x"])})
+    m = wh.manifest()
+    del m["tables"]["t"]["live"]
+    del m["tables"]["t"]["stats"]
+    wh._write_manifest(m)
+    assert _rows(spark, wh, "t") == [(2,), (3,)]
+    wh.commit_round(2, deltas={"t": spark.createDataFrame([(4,)], ["x"])})
+    assert wh.manifest()["tables"]["t"]["live"] == [1, 2]
+    assert _rows(spark, wh, "t") == [(2,), (3,), (4,)]
