@@ -171,17 +171,20 @@ def q_s14_dedup_firstseen(spark, sf):
 
 def q_s14b_surrogate_keys(spark, sf):
     # S14: dense surrogate keys in first-seen order — via the engine's
-    # skew-robust range-partitioned ranking (seen.dense_rank_range), NOT a
+    # skew-robust range-partitioned ranking (seen.rank_and_key), NOT a
     # global single-partition window
-    from crawlspark.seen import dense_rank_range
+    from crawlspark.seen import rank_and_key
 
     e = _t(spark, sf, "events")
-    # dense_rank_range persists+counts its input itself and picks the
-    # single-window fast path for small key counts, the range-partitioned
-    # path beyond small_threshold (adaptive — see seen.py)
+    # every user is "fetched", so surrogate_key is the dense first-seen rank.
+    # rank_and_key persists+counts its input itself and picks the
+    # single-window fast path up to small_threshold keys, the
+    # range-partitioned path beyond (adaptive — see seen.py)
     firsts = e.groupBy("user_id").agg(F.min("ts").alias("first_ts"))
-    return dense_rank_range(
-        firsts, ["first_ts", "user_id"], out_col="surrogate_key"
+    return rank_and_key(
+        firsts.withColumn("is_fetched", F.lit(True)),
+        ["first_ts", "user_id"],
+        small_threshold=2_000_000,
     ).select("user_id", "first_ts", "surrogate_key")
 
 

@@ -491,8 +491,8 @@ def write_baseline_md(crawl: dict, timings: dict[str, float]) -> None:
         "   at 16 cores is ±20-40% (noisy neighbors).",
         "On a real N→4N-executor cluster none of these apply: executors are",
         "whole machines, the per-round serial fraction (~3-5 s of plan compile",
-        "+ commit publish — the only true Amdahl term, measured via",
-        "CRAWLSPARK_TIMING=1 laps) is amortized over 10^7+-URL rounds, and",
+        "+ commit publish — the only true Amdahl term, measured by the",
+        "perfbench round/commit spans) is amortized over 10^7+-URL rounds, and",
         "every per-round plan is partition-parallel (plan audit: PLANS.md).",
         "",
         "## Query battery (sf0.1, local[{}])".format(CPUS),

@@ -82,76 +82,6 @@ def attr_values(attrs: bytes):
         i = k + 1
 
 
-def xml_events(data: bytes):
-    """quick-xml-compatible event stream: (kind, payload, attrs) triples,
-    kind ∈ {'start','end','text'}.
-
-    Start/End carry the namespace-stripped tag name; Text carries the RAW
-    (escaped, trimmed) bytes. Start events additionally carry the raw
-    attribute byte-span of the tag (``b""`` for end/text) so callers can
-    sniff attributes — the reference reads them exactly once, for the ABCD
-    version (abcd_parser.rs:62-78). Comments, PIs, DOCTYPE, CDATA and
-    self-closing tags emit nothing (reference ignores those events).
-    """
-    n = len(data)
-    i = 0
-    find = data.find  # bound method: this loop is the extraction hot path
-    while i < n:
-        j = find(b"<", i)
-        if j < 0:
-            break
-        if j > i:
-            text = data[i:j].strip(_WS)
-            if text:
-                yield ("text", text, b"")
-        # single-character dispatch on the byte after '<' (replaces five
-        # chained startswith probes per tag — same classification: '/'⇒end,
-        # '!'⇒comment/CDATA/DOCTYPE, '?'⇒PI, else start tag; an EOF '<' has
-        # c == b'' and falls through to the start branch's find/break
-        # exactly like the startswith chain did)
-        c = data[j + 1 : j + 2]
-        if c == b"/":
-            k = find(b">", j + 2)
-            if k < 0:
-                break
-            name = data[j + 2 : k].strip(_WS)
-            ci = name.find(b":")
-            if ci >= 0:  # namespace strip (abcd_parser.rs:174-179), inlined
-                name = name[ci + 1 :]
-            yield ("end", name, b"")
-            i = k + 1
-        elif c == b"!":
-            if data.startswith(b"<!--", j):
-                k = find(b"-->", j + 4)
-                i = n if k < 0 else k + 3
-            elif data.startswith(b"<![CDATA[", j):
-                k = find(b"]]>", j + 9)
-                i = n if k < 0 else k + 3
-            else:
-                k = find(b">", j + 2)
-                i = n if k < 0 else k + 1
-        elif c == b"?":
-            k = find(b"?>", j + 2)
-            i = n if k < 0 else k + 2
-        else:
-            k = find(b">", j + 1)
-            if k < 0:
-                break
-            inner = data[j + 1 : k]
-            if inner.endswith(b"/"):
-                i = k + 1  # self-closing == quick-xml Event::Empty, ignored
-                continue
-            parts = inner.split(None, 1)
-            name = parts[0] if parts else inner
-            attrs = parts[1] if len(parts) > 1 else b""
-            ci = name.find(b":")
-            if ci >= 0:
-                name = name[ci + 1 :]
-            yield ("start", name, attrs)
-            i = k + 1
-    # trailing text after the last tag is ignored (EOF)
-
-
 class ParseError(Exception):
     pass
 
@@ -180,14 +110,13 @@ def parse_abcd(
     units: list[dict] = []
     abcd_version: str | None = None
 
-    # The xml_events scan loop is INLINED here (extraction is the crawl's
-    # dominant Python cost; the generator's per-event resume + tuple
+    # The quick-xml-compatible event scan is INLINED here (extraction is the
+    # crawl's dominant Python cost; a generator's per-event resume + tuple
     # allocation was ~30% of parse time). Event order, classification and
-    # state transitions are identical to driving xml_events — pinned by
-    # tests/test_extract.py::test_parse_abcd_matches_event_driven, which
-    # runs this function against an xml_events-driven mirror over the
-    # tricky-input battery. xml_events itself remains the public parity
-    # surface.
+    # state transitions are identical to driving the event generator in
+    # tests/test_extract.py (xml_events) — pinned by
+    # test_parse_abcd_matches_event_driven, which runs this function
+    # against an xml_events-driven mirror over the tricky-input battery.
     data = xml_bytes
     n = len(data)
     i = 0

@@ -50,24 +50,7 @@ Scale notes:
 
 from __future__ import annotations
 
-import os
-import sys
-import time
 from dataclasses import dataclass
-
-_TIMING = os.environ.get("CRAWLSPARK_TIMING") == "1"
-
-
-class _Timer:
-    def __init__(self, round_: int):
-        self.round = round_
-        self.t = time.time()
-
-    def lap(self, label: str) -> None:
-        if _TIMING:
-            now = time.time()
-            sys.stderr.write(f"[timing r{self.round}] {label}: {now - self.t:.2f}s\n")
-            self.t = now
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -77,9 +60,12 @@ from .canonical import canonicalize_expr, host_expr, url_hash_expr
 from .extract import extract_pages, split_dataset_units
 from .fields import AbcdFields
 from .seen import (
-    distributed_bloom_update,
-    distributed_cuckoo_update,
+    PartitionedBloom,
+    PartitionedCuckoo,
+    SeenFilter,
+    committed_filter,
     rank_and_key,
+    routed_update,
     split_new_vs_seen,
 )
 from .settings import Settings
@@ -192,30 +178,17 @@ class Crawler:
         return self.wh.read_state(self.spark, name)
 
     # ------------------------------------------------------------------
-    @property
-    def _filter_table(self) -> str:
-        """Warehouse table of the seen-set prefilter ('bloom' or 'cuckoo')."""
-        return self.settings.crawl.seen_filter
-
-    def _committed_filter(self) -> DataFrame | None:
-        """The last committed prefilter table, or None before the first
-        commit. A lazy handle: the driver never collects or rebuilds it."""
-        tname = self._filter_table
-        return self.wh.read_state(self.spark, tname) if self.wh.has_table(tname) else None
-
-    def _filter_update(self, new_hashes: DataFrame, prev_df, deletes: DataFrame | None = None):
-        """This round's prefilter state from the previous state + adds
-        (+ deletes, cuckoo only) — executor-side per-bucket cogroup."""
+    def _seen_filter(self) -> SeenFilter:
+        """The committed prefilter (a lazy handle: the driver never collects
+        or rebuilds it), else an empty one sized by the settings. A
+        committed filter keeps its own kind and geometry."""
+        committed = committed_filter(self.spark, self.wh)
+        if committed is not None:
+            return committed
         c = self.settings.crawl
         if c.seen_filter == "cuckoo":
-            return distributed_cuckoo_update(
-                new_hashes, prev_df, c.cuckoo_entries, c.cuckoo_slots,
-                c.seen_buckets, deleted_hashes=deletes,
-            )
-        assert deletes is None, "bloom filters cannot delete — use seen_filter='cuckoo'"
-        return distributed_bloom_update(
-            new_hashes, prev_df, c.bloom_bits, c.bloom_hashes, c.seen_buckets
-        )
+            return SeenFilter(PartitionedCuckoo(c.cuckoo_entries, c.cuckoo_slots, c.seen_buckets))
+        return SeenFilter(PartitionedBloom(c.bloom_bits, c.bloom_hashes, c.seen_buckets))
 
     def _load_state(self):
         """(frontier, seen, next_key, next_round) from the last commit."""
@@ -259,13 +232,13 @@ class Crawler:
         fingerprint (inherent cuckoo-filter caveat; the exact semi-join is
         the guard).
 
-        * ``seen_filter='cuckoo'``: per-bucket fingerprint deletes — ONE
-          cogroup over the eviction hashes, no rebuild (this is why the
-          cuckoo path exists: at 10^10 URLs a Bloom rebuild re-reads the
-          whole seen table per eviction wave).
-        * ``seen_filter='bloom'``: Bloom filters cannot delete — the filter
-          is REBUILT from the remaining seen hashes (one pass over the seen
-          table; the documented rebuild story).
+        * a cuckoo filter: per-bucket fingerprint deletes — ONE cogroup
+          over the eviction hashes, no rebuild (this is why the cuckoo path
+          exists: at 10^10 URLs a Bloom rebuild re-reads the whole seen
+          table per eviction wave).
+        * a Bloom filter cannot delete — it is REBUILT, same geometry, from
+          the remaining seen hashes (one pass over the seen table; the
+          documented rebuild story).
 
         ``requeue=True`` additionally re-enqueues the evicted URLs into the
         frontier (priority 0, provider 'recrawl') in the SAME commit, so the
@@ -286,16 +259,16 @@ class Crawler:
             removed.unpersist()
             return 0
         new_seen = seen.join(ev, cond, "left_anti")
-        tname = self._filter_table
-        empty_hashes = sp.createDataFrame([], "url_hash long")
-        if self.settings.crawl.seen_filter == "cuckoo":
-            filter_df = self._filter_update(
-                empty_hashes, self._committed_filter(), deletes=removed.select("url_hash")
+        filt = self._seen_filter()
+        if isinstance(filt.shape, PartitionedCuckoo):
+            filter_df = routed_update(
+                sp.createDataFrame([], "url_hash long"), filt,
+                deleted_hashes=removed.select("url_hash"),
             )
         else:
-            filter_df = self._filter_update(new_seen.select("url_hash"), None)
+            filter_df = routed_update(new_seen.select("url_hash"), SeenFilter(filt.shape))
         round_ = self.wh.last_round() + 1
-        snapshots = {"seen": new_seen, tname: filter_df}
+        snapshots = {"seen": new_seen, filt.shape.table: filter_df}
         if requeue:
             frontier = enrich(
                 self.wh.read_state(sp, "frontier", schemas.FRONTIER)
@@ -354,11 +327,10 @@ class Crawler:
     ) -> tuple[RoundResult, DataFrame, DataFrame, int]:
         s = self.settings.crawl
         sp = self.spark
-        tm = _Timer(round_)
         _pins: list = []
         # the last committed prefilter: probed below, and the base of this
         # round's filter update
-        bloom = self._committed_filter()
+        filt = self._seen_filter()
 
         base = enrich(frontier)
 
@@ -377,7 +349,7 @@ class Crawler:
 
         # in-batch duplicate canonicals — blocked/is_seen are functions of curl,
         # so every row of a curl-partition shares them and the window may run
-        # over the full partition. The window's shuffle runs BEFORE the bloom
+        # over the full partition. The window's shuffle runs BEFORE the filter
         # probe on purpose: a pandas UDF directly above a file scan triggers
         # Spark 4's PythonRunner selector-spin (see extract.py); fed from the
         # window's exchange instead, the probe streams.
@@ -386,12 +358,8 @@ class Crawler:
 
         # 3. seen-set membership (prefilter + exact confirm, seen.py) — the
         # committed filter table is probed bucket-routed: each batch bucket
-        # is cogrouped with only its own bitmap row, on the executors
-        base = split_new_vs_seen(
-            base, seen, bloom,
-            bloom_buckets=s.seen_buckets,
-            keep=_pins,
-        ).persist()
+        # is cogrouped with only its own filter row, on the executors
+        base = split_new_vs_seen(base, seen, filt, keep=_pins).persist()
 
         if s.budget_override is not None:  # bulk/bench mode
             budget = F.lit(s.budget_override)
@@ -562,7 +530,6 @@ class Crawler:
         ).persist()
         _pins.append(ranked)
 
-        tm.lap("politeness+fetch plan")
         # ALL round counters in ONE action: non-selected dispositions union the
         # selected/fetch-statused ones AND the extraction kinds (each branch
         # reads a cached parent) — drop/eligibility/fetch/extraction counts
@@ -593,7 +560,6 @@ class Crawler:
             .count()
             .collect()
         }
-        tm.lap("all counters")
         n_fetched = c1.get("fetched", 0)
         n_retried = c1.get("retried", 0)
         n_failed = c1.get("failed", 0)
@@ -718,13 +684,10 @@ class Crawler:
             new_frontier = new_frontier.unionByName(discovered)
 
         # update the prefilter with this round's new hashes — EXECUTOR-side
-        # per-bucket cogroup (seen.distributed_bloom_update / _cuckoo_update);
-        # the driver never collects url hashes. The cogroup job runs inside
-        # the commit's parallel write wave.
-        tm.lap("pre-bloom")
-        tname = self._filter_table
-        bloom_df = self._filter_update(new_seen.select("url_hash"), bloom)
-        tm.lap("bloom plan")
+        # per-bucket cogroup (seen.routed_update); the driver never collects
+        # url hashes. The cogroup job runs inside the commit's parallel
+        # write wave.
+        filter_df = routed_update(new_seen.select("url_hash"), filt)
 
         # sort-on-write (S21, the reference's post-load CLUSTER analog,
         # src/storage/database_sink.rs:408-489): committed dataset/unit files
@@ -733,7 +696,7 @@ class Crawler:
         # are written (the warehouse folds deltas into its base).
         self.wh.commit_round(
             round_,
-            snapshots={"frontier": new_frontier, tname: bloom_df},
+            snapshots={"frontier": new_frontier, filt.shape.table: filter_df},
             deltas={"seen": new_seen},
             appends={
                 "crawl_log": crawl_log,
@@ -746,7 +709,6 @@ class Crawler:
             stats_cols={"datasets": ["surrogate_key"], "units": ["surrogate_key"]},
         )
 
-        tm.lap("commit")
         for df in (base, elig, cand, statused, extracted, *_pins):
             df.unpersist()
 

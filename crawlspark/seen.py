@@ -1,4 +1,4 @@
-"""URL-seen set: Bloom prefilter + exact anti-join + dense surrogate keys.
+"""URL-seen set: partitioned prefilter + exact confirm join + dense surrogate keys.
 
 Reference semantics being scaled out:
 
@@ -9,28 +9,44 @@ Reference semantics being scaled out:
 Engine design (north_rule):
 
 * identity = xxhash64(canonical url), canonicalization in canonical.py.
-* exactness — the Bloom filter may only *route*, never *drop*: hashes the
-  Bloom reports as possibly-seen are confirmed by an exact anti-join against
-  the seen table; hashes it reports as definitely-new skip that join entirely.
-  The final seen set is therefore exactly the reference's (BASELINE.json:2).
-* the Bloom filter is *partitioned* by hash range (``url_hash & (buckets-1)``)
-  and BOTH sides honor it: the build is a per-bucket cogroup
-  (distributed_bloom_update) and so is the probe (bloom_probe_routed /
-  cuckoo_probe_routed) — no task, executor, or the driver ever holds more
-  than one bucket's bitmap, so the same probe serves a test crawl and a
-  10^10-URL one. The driver never collects or rebuilds the filter.
+* exactness — the prefilter's answer is only a condition of the exact
+  confirm join: a row is seen iff the join finds its canonical url in the
+  seen table, and the filter can only stop a row from matching. So a false
+  positive costs nothing but a join probe, and the final seen set is
+  exactly the reference's (BASELINE.json:2) — provided the filter has no
+  false negatives for the way it is probed. Filter-negative rows do NOT
+  skip the join: the plan joins the whole batch against the whole seen
+  table (``explain``: ``BroadcastHashJoin LeftOuter`` on (url_hash, url),
+  ``Join condition: _maybe``).
+* two filter kinds, one shape: PartitionedBloom (append-only) and
+  PartitionedCuckoo (deletable) are the only code here that differs by
+  kind. Both partition the key space by hash range
+  (``url_hash & (n_buckets-1)``) and serialize as one
+  ``(bucket, blob, *geometry)`` row per partition; one probe
+  (routed_probe) and one build/update (routed_update) cogroup each batch
+  bucket with only its own filter row, so no task, executor or the driver
+  ever holds more than one partition, and the driver never collects or
+  rebuilds the filter.
+* a committed filter owns its geometry: committed_filter reads the kind,
+  the bucket count and the per-partition size from the table's parquet
+  footers (no Spark job), so every probe and update routes the way the
+  filter was built. Settings only size a filter that does not exist yet.
 * dense key assignment avoids a global single-partition sort on large
-  batches: range-partitioned row_number + per-partition offset cumulative sum
-  (rank_and_key / dense_rank_range; the partition-count table is tiny).
+  batches: range-partitioned row_number + per-partition offset cumulative
+  sum (rank_and_key; the partition-count table is tiny).
 """
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from . import schemas
 
 _MASK = np.uint64(0xFFFFFFFFFFFFFFFF)
 
@@ -43,26 +59,76 @@ def _splitmix64(x: np.ndarray) -> np.ndarray:
     return x ^ (x >> np.uint64(31))
 
 
-class PartitionedBloom:
+class _Partitioned:
+    """What both filter kinds share. Keys route to partitions by
+    ``hash mod n_buckets`` (the same as the ``hash & (n_buckets-1)`` the
+    routed cogroups shuffle by, bucket counts being powers of two); each
+    partition is one numpy array, serialized as one
+    ``(bucket, blob, *geometry)`` row of the kind's ``schema``.
+
+    A kind sets ``table`` (its warehouse table and ``crawl.seen_filter``
+    name), ``schema`` and ``geometry_cols`` (its two per-partition size
+    columns, in constructor order), and implements ``_blank``, ``_add``,
+    ``_contains`` and ``from_rows``.
+    """
+
+    table: str
+    geometry_cols: tuple[str, str]
+
+    def __init__(self, n_buckets: int, parts: dict[int, np.ndarray] | None):
+        self.n_buckets = n_buckets
+        self.parts = parts or {}
+
+    @property
+    def geometry(self) -> tuple[int, int, int]:
+        """Constructor arguments of an empty filter of this shape."""
+        return (*(getattr(self, c) for c in self.geometry_cols), self.n_buckets)
+
+    def _by_partition(self, hashes: np.ndarray):
+        """(partition, row mask) for each partition ``hashes`` touch."""
+        buckets = hashes.astype(np.int64).view(np.uint64) % np.uint64(self.n_buckets)
+        for b in np.unique(buckets):
+            yield int(b), buckets == b
+
+    def _part(self, bucket: int) -> np.ndarray:
+        part = self.parts.get(bucket)
+        if part is None:
+            part = self.parts[bucket] = self._blank()
+        return part
+
+    def add(self, hashes: np.ndarray) -> None:
+        for b, sel in self._by_partition(hashes):
+            self._add(self._part(b), hashes[sel])
+
+    def might_contain(self, hashes: np.ndarray) -> np.ndarray:
+        out = np.zeros(len(hashes), dtype=bool)
+        for b, sel in self._by_partition(hashes):
+            part = self.parts.get(b)
+            if part is not None:  # nothing was ever added there
+                out[sel] = self._contains(part, hashes[sel])
+        return out
+
+    def to_rows(self) -> list[tuple]:
+        return [(b, p.tobytes(), *self.geometry) for b, p in sorted(self.parts.items())]
+
+
+class PartitionedBloom(_Partitioned):
     """Hash-range-partitioned Bloom filter over xxhash64 keys.
 
-    k probe positions per key: (h1 + i*h2) mod bits, h2 = splitmix64(h1).
-    Serialized as one (bucket, bitmap bytes) row per bucket.
+    k probe positions per key: (h1 + i*h2) mod bits, h2 = splitmix64(h1);
+    one bitmap per partition.
     """
+
+    table, schema, geometry_cols = "bloom", schemas.BLOOM, ("bits", "k")
 
     def __init__(self, bits_per_bucket: int, n_hashes: int, n_buckets: int,
                  bitmaps: dict[int, np.ndarray] | None = None):
+        super().__init__(n_buckets, bitmaps)
         self.bits = bits_per_bucket
         self.k = n_hashes
-        self.n_buckets = n_buckets
-        self.bitmaps = bitmaps or {}
 
-    def _bitmap(self, bucket: int) -> np.ndarray:
-        bm = self.bitmaps.get(bucket)
-        if bm is None:
-            bm = np.zeros(self.bits // 8 + 1, dtype=np.uint8)
-            self.bitmaps[bucket] = bm
-        return bm
+    def _blank(self) -> np.ndarray:
+        return np.zeros(self.bits // 8 + 1, dtype=np.uint8)
 
     def _positions(self, hashes: np.ndarray) -> np.ndarray:
         h1 = hashes.astype(np.int64).view(np.uint64)
@@ -70,39 +136,13 @@ class PartitionedBloom:
         ks = np.arange(self.k, dtype=np.uint64)
         return ((h1[:, None] + ks[None, :] * h2[:, None]) % np.uint64(self.bits)).astype(np.int64)
 
-    def add(self, hashes: np.ndarray) -> None:
-        if len(hashes) == 0:
-            return
-        buckets = (hashes.astype(np.int64).view(np.uint64) % np.uint64(self.n_buckets)).astype(np.int64)
-        pos = self._positions(hashes)
-        for b in np.unique(buckets):
-            bm = self._bitmap(int(b))
-            p = pos[buckets == b].ravel()
-            np.bitwise_or.at(bm, p >> 3, (1 << (p & 7)).astype(np.uint8))
+    def _add(self, bm: np.ndarray, hashes: np.ndarray) -> None:
+        p = self._positions(hashes).ravel()
+        np.bitwise_or.at(bm, p >> 3, (1 << (p & 7)).astype(np.uint8))
 
-    def might_contain(self, hashes: np.ndarray) -> np.ndarray:
-        if len(hashes) == 0:
-            return np.zeros(0, dtype=bool)
-        buckets = (hashes.astype(np.int64).view(np.uint64) % np.uint64(self.n_buckets)).astype(np.int64)
-        pos = self._positions(hashes)
-        out = np.ones(len(hashes), dtype=bool)
-        for b in np.unique(buckets):
-            sel = buckets == b
-            bm = self.bitmaps.get(int(b))
-            if bm is None:
-                out[sel] = False
-                continue
-            p = pos[sel]
-            bits = (bm[p >> 3] >> (p & 7)) & 1
-            out[sel] = bits.all(axis=1)
-        return out
-
-    # -- (de)serialization to a tiny DataFrame-backed table -----------------
-    def to_rows(self) -> list[tuple[int, bytes, int, int, int]]:
-        return [
-            (b, bm.tobytes(), self.bits, self.k, self.n_buckets)
-            for b, bm in sorted(self.bitmaps.items())
-        ]
+    def _contains(self, bm: np.ndarray, hashes: np.ndarray) -> np.ndarray:
+        p = self._positions(hashes)
+        return ((bm[p >> 3] >> (p & 7)) & 1).all(axis=1)
 
     @classmethod
     def from_rows(cls, rows) -> "PartitionedBloom":
@@ -112,7 +152,7 @@ class PartitionedBloom:
             bitmaps[int(b)] = np.frombuffer(bytes(blob), dtype=np.uint8).copy()
         if bits is None:
             raise ValueError("empty bloom rows")
-        return cls(bits, k, nb, bitmaps)
+        return cls(int(bits), int(k), int(nb), bitmaps)
 
 
 def _splitmix64_int(x: int) -> int:
@@ -124,7 +164,7 @@ def _splitmix64_int(x: int) -> int:
     return x ^ (x >> 31)
 
 
-class PartitionedCuckoo:
+class PartitionedCuckoo(_Partitioned):
     """Hash-range-partitioned cuckoo filter over xxhash64 keys — the
     DELETABLE seen-set prefilter (re-crawl eviction at 10^10 URLs, where a
     Bloom filter would force a full rebuild per eviction wave).
@@ -133,9 +173,7 @@ class PartitionedCuckoo:
     Bloom", CoNEXT 2014): per key a 16-bit fingerprint stored in one of two
     candidate buckets of ``slots`` entries; partial-key cuckoo hashing gives
     the alternate bucket as ``i ^ hash(fp)``, so eviction chains never need
-    the original key. Same exactness contract as PartitionedBloom: the filter
-    only ROUTES (maybe/definitely-new); an exact join confirms — so a false
-    positive costs a join row, never a wrong answer.
+    the original key. One ``(m, slots)`` table per partition.
 
     Deterministic throughout (victim slot rotates by kick count, start bucket
     picked by fingerprint parity) — same input always builds the same tables.
@@ -151,35 +189,28 @@ class PartitionedCuckoo:
     Deleting a key that was never added may still clear a colliding key's
     fingerprint (inherent to cuckoo filters — public caveat); callers must
     pre-filter deletions against the exact seen set, as Crawler.evict does,
-    and must add each key at most once per lifetime-unless-deleted, as
-    split_new_vs_seen guarantees (only definitely-new hashes reach add).
+    and must add each key at most once per lifetime-unless-deleted, as the
+    crawl round does (only keys the exact confirm found new reach add).
 
-    Partitioned like the Bloom: key-space routed by ``hash & (n_buckets-1)``,
-    one (bucket, table) row per partition; build/probe are per-bucket
-    cogroups, so no task or the driver ever holds more than one bucket's
-    table (~``m * slots * 2`` bytes). Insert placement is a per-item loop
-    (cuckoo kicks are inherently sequential) over a numpy table — throughput
-    scales with executors because buckets are independent; probes and the
-    already-present screen are fully vectorized.
+    Insert placement is a per-item loop (cuckoo kicks are inherently
+    sequential) over a numpy table — throughput scales with executors
+    because partitions are independent; probes are fully vectorized.
     """
+
+    table, schema, geometry_cols = "cuckoo", schemas.CUCKOO, ("m", "slots")
 
     def __init__(self, m: int, slots: int, n_buckets: int,
                  tables: dict[int, np.ndarray] | None = None,
                  max_kicks: int = 500):
         if m & (m - 1):
             raise ValueError(f"m must be a power of two, got {m}")
+        super().__init__(n_buckets, tables)
         self.m = m
         self.slots = slots
-        self.n_buckets = n_buckets
-        self.tables = tables or {}
         self.max_kicks = max_kicks
 
-    def _table(self, bucket: int) -> np.ndarray:
-        t = self.tables.get(bucket)
-        if t is None:
-            t = np.zeros((self.m, self.slots), dtype=np.uint16)
-            self.tables[bucket] = t
-        return t
+    def _blank(self) -> np.ndarray:
+        return np.zeros((self.m, self.slots), dtype=np.uint16)
 
     def _derive(self, hashes: np.ndarray):
         """(fingerprint uint16 nonzero, i1, i2) arrays for keys."""
@@ -193,88 +224,52 @@ class PartitionedCuckoo:
     def _alt(self, i: int, fp: int) -> int:
         return i ^ (_splitmix64_int(fp) & (self.m - 1))
 
-    def _route(self, hashes: np.ndarray) -> np.ndarray:
-        return (hashes.astype(np.int64).view(np.uint64) % np.uint64(self.n_buckets)).astype(np.int64)
-
-    def add(self, hashes: np.ndarray) -> None:
-        if len(hashes) == 0:
-            return
+    def _add(self, tbl: np.ndarray, hashes: np.ndarray) -> None:
         # within-call exact-hash dedup only: distinct colliding keys MUST each
         # store their own copy or delete() breaks (see class docstring)
-        hashes = np.unique(hashes)
-        buckets = self._route(hashes)
+        for f, a, c in zip(*self._derive(np.unique(hashes))):
+            f, a, c = int(f), int(a), int(c)
+            placed = False
+            for idx in (a, c):
+                free = np.flatnonzero(tbl[idx] == 0)
+                if len(free):
+                    tbl[idx, free[0]] = f
+                    placed = True
+                    break
+            if placed:
+                continue
+            cur = a if f & 1 else c
+            for kick in range(self.max_kicks):
+                slot = kick % self.slots  # deterministic victim rotation
+                f, tbl[cur, slot] = int(tbl[cur, slot]), f
+                cur = self._alt(cur, f)
+                free = np.flatnonzero(tbl[cur] == 0)
+                if len(free):
+                    tbl[cur, free[0]] = f
+                    break
+            else:
+                raise RuntimeError(
+                    f"cuckoo partition full after {self.max_kicks} kicks — "
+                    f"raise cuckoo_entries (m={self.m}, load factor too high)"
+                )
+
+    def _contains(self, tbl: np.ndarray, hashes: np.ndarray) -> np.ndarray:
         fp, i1, i2 = self._derive(hashes)
-        for b in np.unique(buckets):
-            sel = buckets == b
-            tbl = self._table(int(b))
-            for f, a, c in zip(fp[sel], i1[sel], i2[sel]):
-                f, a, c = int(f), int(a), int(c)
-                placed = False
-                for idx in (a, c):
-                    free = np.flatnonzero(tbl[idx] == 0)
-                    if len(free):
-                        tbl[idx, free[0]] = f
-                        placed = True
-                        break
-                if placed:
-                    continue
-                cur = a if f & 1 else c
-                for kick in range(self.max_kicks):
-                    slot = kick % self.slots  # deterministic victim rotation
-                    f, tbl[cur, slot] = int(tbl[cur, slot]), f
-                    cur = self._alt(cur, f)
-                    free = np.flatnonzero(tbl[cur] == 0)
-                    if len(free):
-                        tbl[cur, free[0]] = f
-                        break
-                else:
-                    raise RuntimeError(
-                        f"cuckoo bucket {int(b)} full after {self.max_kicks} kicks — "
-                        f"raise cuckoo_entries (m={self.m}, load factor too high)"
-                    )
+        return (tbl[i1] == fp[:, None]).any(axis=1) | (tbl[i2] == fp[:, None]).any(axis=1)
 
     def delete(self, hashes: np.ndarray) -> None:
         """Remove one stored copy of each key's fingerprint (keys MUST have
         been inserted — see class docstring; absent fingerprints are no-ops)."""
-        if len(hashes) == 0:
-            return
-        buckets = self._route(hashes)
-        fp, i1, i2 = self._derive(hashes)
-        for b in np.unique(buckets):
-            sel = np.flatnonzero(buckets == b)
-            tbl = self.tables.get(int(b))
+        for b, sel in self._by_partition(hashes):
+            tbl = self.parts.get(b)
             if tbl is None:
                 continue
-            for j in sel:
-                f = int(fp[j])
-                for idx in (int(i1[j]), int(i2[j])):
+            for f, a, c in zip(*self._derive(hashes[sel])):
+                for idx in (int(a), int(c)):
                     hit = np.flatnonzero(tbl[idx] == f)
                     if len(hit):
                         tbl[idx, hit[0]] = 0
                         break
-
-    def might_contain(self, hashes: np.ndarray) -> np.ndarray:
-        if len(hashes) == 0:
-            return np.zeros(0, dtype=bool)
-        buckets = self._route(hashes)
-        fp, i1, i2 = self._derive(hashes)
-        out = np.zeros(len(hashes), dtype=bool)
-        for b in np.unique(buckets):
-            sel = buckets == b
-            tbl = self.tables.get(int(b))
-            if tbl is None:
-                continue
-            out[sel] = (tbl[i1[sel]] == fp[sel][:, None]).any(axis=1) | (
-                tbl[i2[sel]] == fp[sel][:, None]
-            ).any(axis=1)
-        return out
-
-    # -- (de)serialization — same row-per-bucket shape as PartitionedBloom --
-    def to_rows(self) -> list[tuple[int, bytes, int, int, int]]:
-        return [
-            (b, t.tobytes(), self.m, self.slots, self.n_buckets)
-            for b, t in sorted(self.tables.items())
-        ]
 
     @classmethod
     def from_rows(cls, rows) -> "PartitionedCuckoo":
@@ -289,179 +284,160 @@ class PartitionedCuckoo:
         return cls(int(m), int(slots), int(nb), tables)
 
 
-def bloom_probe_routed(
-    keys: DataFrame, bloom_df: DataFrame, n_buckets: int, hash_col: str = "h"
-) -> DataFrame:
-    """Bucket-routed Bloom probe — the 10^10-URL path.
+class SeenFilter(NamedTuple):
+    """A prefilter table: ``shape``, an empty filter that carries the kind
+    and geometry, and ``df``, the committed ``(bucket, blob, *geometry)``
+    rows (None while nothing is committed)."""
 
-    ``keys`` (one long column ``hash_col``) is shuffled by
-    ``url_hash & (n_buckets-1)`` and cogrouped with ONLY that bucket's bitmap
-    row, mirroring the build (distributed_bloom_update): no task, executor, or
-    the driver ever holds more than one bucket's bitmap. Returns
-    (``hash_col``, maybe boolean). Buckets with no bitmap row report
-    definitely-new (nothing was ever added there).
+    shape: _Partitioned
+    df: DataFrame | None = None
+
+
+def committed_filter(spark: SparkSession, wh) -> SeenFilter | None:
+    """The prefilter committed in warehouse ``wh``, shaped as it was built.
+
+    Kind, bucket count and per-partition size come from the table's
+    parquet footers (constant columns, so min == max) — no Spark job.
+    None when no filter, or only an empty one, is committed. Should a
+    warehouse hold both kinds, the one committed last is current.
     """
+    tables = wh.manifest()["tables"]
+    kinds = [k for k in (PartitionedBloom, PartitionedCuckoo) if wh.has_table(k.table)]
+    if not kinds:
+        return None
+    kind = max(kinds, key=lambda k: max(tables[k.table]["rounds"]))
+    cols = [*kind.geometry_cols, "n_buckets"]
+    st = wh.state_stats(kind.table, cols)
+    if st["rows"] == 0:
+        return None
+    if st["min"] != st["max"]:
+        raise ValueError(f"{kind.table} partitions disagree on geometry: {st}")
+    return SeenFilter(kind(*(st["min"][c] for c in cols)), wh.read_state(spark, kind.table))
+
+
+def _routed(hashes: DataFrame, hash_col: str, n_buckets: int) -> DataFrame:
+    """(bucket, h) rows: ``hash_col`` keyed by the filter partition it
+    routes to."""
     if n_buckets & (n_buckets - 1):
         raise ValueError(f"n_buckets must be a power of two, got {n_buckets}")
-    kb = keys.select(
-        F.col(hash_col).alias("h"),
+    return hashes.select(
         F.col(hash_col).bitwiseAND(F.lit(n_buckets - 1)).cast("int").alias("bucket"),
+        F.col(hash_col).alias("h"),
     )
-    blm = bloom_df.select("bucket", "bitmap", "bits", "k", "n_buckets")
 
-    def probe(key, k_pdf: pd.DataFrame, b_pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(k_pdf):
-            return pd.DataFrame(
-                {"h": pd.Series(dtype="int64"), "maybe": pd.Series(dtype=bool)}
-            )
+
+def routed_probe(keys: DataFrame, filt: SeenFilter, hash_col: str = "h") -> DataFrame:
+    """Bucket-routed probe of a committed filter — the 10^10-URL path.
+
+    ``keys`` (one long column ``hash_col``) is shuffled by filter partition
+    and cogrouped with ONLY that partition's row, mirroring the build
+    (routed_update). Returns (``hash_col``, maybe boolean); partitions with
+    no row report definitely-new (nothing was ever added there).
+    """
+    kind, geometry = type(filt.shape), filt.shape.geometry
+    blob = kind.schema.names[1]
+
+    def probe(key, k_pdf: pd.DataFrame, f_pdf: pd.DataFrame) -> pd.DataFrame:
         h = k_pdf["h"].to_numpy(dtype=np.int64)
-        if not len(b_pdf):
-            maybe = np.zeros(len(h), dtype=bool)
-        else:
-            r = b_pdf.iloc[0]
-            bl = PartitionedBloom.from_rows(
-                [(int(r["bucket"]), r["bitmap"], int(r["bits"]), int(r["k"]), int(r["n_buckets"]))]
-            )
-            maybe = bl.might_contain(h)
+        maybe = np.zeros(len(h), dtype=bool)
+        if len(h) and len(f_pdf):
+            f = kind.from_rows([(int(key[0]), f_pdf[blob].iloc[0], *geometry)])
+            maybe = f.might_contain(h)
         return pd.DataFrame({"h": h, "maybe": maybe})
 
     return (
-        kb.groupBy("bucket")
-        .cogroup(blm.groupBy("bucket"))
+        _routed(keys, hash_col, filt.shape.n_buckets).groupBy("bucket")
+        .cogroup(filt.df.select("bucket", blob).groupBy("bucket"))
         .applyInPandas(probe, "h long, maybe boolean")
         .withColumnRenamed("h", hash_col)
     )
 
 
-def cuckoo_probe_routed(
-    keys: DataFrame, cuckoo_df: DataFrame, n_buckets: int, hash_col: str = "h"
-) -> DataFrame:
-    """Bucket-routed cuckoo probe — identical shape to bloom_probe_routed:
-    keys shuffled by ``hash % n_buckets``, cogrouped with ONLY that bucket's
-    table row; returns (``hash_col``, maybe boolean)."""
-    if n_buckets & (n_buckets - 1):
-        raise ValueError(f"n_buckets must be a power of two, got {n_buckets}")
-    kb = keys.select(
-        F.col(hash_col).alias("h"),
-        F.col(hash_col).bitwiseAND(F.lit(n_buckets - 1)).cast("int").alias("bucket"),
-    )
-    ck = cuckoo_df.select("bucket", "table", "m", "slots", "n_buckets")
-
-    def probe(key, k_pdf: pd.DataFrame, c_pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(k_pdf):
-            return pd.DataFrame(
-                {"h": pd.Series(dtype="int64"), "maybe": pd.Series(dtype=bool)}
-            )
-        h = k_pdf["h"].to_numpy(dtype=np.int64)
-        if not len(c_pdf):
-            maybe = np.zeros(len(h), dtype=bool)
-        else:
-            r = c_pdf.iloc[0]
-            ck_ = PartitionedCuckoo.from_rows(
-                [(int(r["bucket"]), r["table"], int(r["m"]), int(r["slots"]), int(r["n_buckets"]))]
-            )
-            maybe = ck_.might_contain(h)
-        return pd.DataFrame({"h": h, "maybe": maybe})
-
-    return (
-        kb.groupBy("bucket")
-        .cogroup(ck.groupBy("bucket"))
-        .applyInPandas(probe, "h long, maybe boolean")
-        .withColumnRenamed("h", hash_col)
-    )
-
-
-def distributed_cuckoo_update(
+def routed_update(
     new_hashes: DataFrame,
-    prev_cuckoo: DataFrame | None,
-    m: int,
-    slots: int,
-    n_buckets: int,
+    filt: SeenFilter,
     hash_col: str = "url_hash",
     deleted_hashes: DataFrame | None = None,
 ) -> DataFrame:
-    """Executor-side cuckoo build/update: per-bucket insert AND delete in one
-    cogroup — the deletable analog of distributed_bloom_update (same shuffle
-    shape: this round's add/delete hashes routed by ``hash & (n_buckets-1)``,
-    cogrouped with the bucket's previous table row). Deletes apply before
-    adds, so an evict+re-crawl of the same URL in one update nets present.
-    Output is a CUCKOO-schema frame covering every bucket that has state.
-    """
-    if n_buckets & (n_buckets - 1):
-        raise ValueError(f"n_buckets must be a power of two, got {n_buckets}")
-    from . import schemas
-    from pyspark.sql import SparkSession
+    """Executor-side filter build/update: one cogroup per partition.
 
-    spark = SparkSession.getActiveSession()
-    ops = new_hashes.select(
-        F.col(hash_col).bitwiseAND(F.lit(n_buckets - 1)).cast("int").alias("bucket"),
-        F.col(hash_col).alias("h"),
-        F.lit(1).alias("op"),
-    )
+    The driver never touches url hashes — each partition's group (this
+    round's add and delete hashes, routed like the probe, cogrouped with
+    the partition's committed row in ``filt.df``) is merged inside one
+    Arrow-batched task. At 10^10 URLs this is one shuffle of the new hashes
+    plus n_buckets tiny filter rows. Deletes (cuckoo only) apply before
+    adds, so an evict+re-crawl of the same URL in one update nets present.
+    Output is a ``filt.shape.schema`` frame with one row per partition
+    that has state.
+    """
+    kind, geometry = type(filt.shape), filt.shape.geometry
+    blob = kind.schema.names[1]
+    if deleted_hashes is not None and not hasattr(kind, "delete"):
+        raise ValueError(f"{kind.table} filters cannot delete — use seen_filter='cuckoo'")
+    ops = _routed(new_hashes, hash_col, filt.shape.n_buckets).withColumn("op", F.lit(1))
     if deleted_hashes is not None:
         ops = ops.unionByName(
-            deleted_hashes.select(
-                F.col(hash_col).bitwiseAND(F.lit(n_buckets - 1)).cast("int").alias("bucket"),
-                F.col(hash_col).alias("h"),
-                F.lit(-1).alias("op"),
-            )
+            _routed(deleted_hashes, hash_col, filt.shape.n_buckets).withColumn("op", F.lit(-1))
         )
-    prev = (
-        prev_cuckoo.select("bucket", "table")
-        if prev_cuckoo is not None
-        else spark.createDataFrame([], schemas.CUCKOO).select("bucket", "table")
-    )
+    prev = filt.df
+    if prev is None:
+        prev = SparkSession.getActiveSession().createDataFrame([], kind.schema)
 
     def merge(key, ops_pdf: pd.DataFrame, prev_pdf: pd.DataFrame) -> pd.DataFrame:
         bucket = int(key[0])
+        f = kind(*geometry)
         if len(prev_pdf):
-            ck = PartitionedCuckoo.from_rows(
-                [(bucket, prev_pdf["table"].iloc[0], m, slots, n_buckets)]
-            )
-        else:
-            ck = PartitionedCuckoo(m, slots, n_buckets)
+            f = kind.from_rows([(bucket, prev_pdf[blob].iloc[0], *geometry)])
         if len(ops_pdf):
             dels = ops_pdf.loc[ops_pdf["op"] < 0, "h"].to_numpy(dtype=np.int64)
-            adds = ops_pdf.loc[ops_pdf["op"] > 0, "h"].to_numpy(dtype=np.int64)
-            ck.delete(dels)
-            ck.add(adds)
-        return pd.DataFrame(
-            {
-                "bucket": [bucket],
-                "table": [ck._table(bucket).tobytes()],
-                "m": [m],
-                "slots": [slots],
-                "n_buckets": [n_buckets],
-            }
-        )
+            if len(dels):
+                f.delete(dels)
+            f.add(ops_pdf.loc[ops_pdf["op"] > 0, "h"].to_numpy(dtype=np.int64))
+        return pd.DataFrame(f.to_rows(), columns=kind.schema.names)
 
     return (
         ops.groupBy("bucket")
-        .cogroup(prev.groupBy("bucket"))
-        .applyInPandas(merge, schemas.CUCKOO)
+        .cogroup(prev.select("bucket", blob).groupBy("bucket"))
+        .applyInPandas(merge, kind.schema)
     )
+
+
+def distributed_bloom_update(
+    new_hashes: DataFrame,
+    prev_bloom: DataFrame | None,
+    bits: int,
+    k: int,
+    n_buckets: int,
+    hash_col: str = "url_hash",
+) -> DataFrame:
+    """routed_update of a Bloom filter of the given geometry, for callers
+    that size the filter themselves."""
+    shape = PartitionedBloom(bits, k, n_buckets)
+    return routed_update(new_hashes, SeenFilter(shape, prev_bloom), hash_col)
 
 
 def split_new_vs_seen(
     batch: DataFrame,
     seen: DataFrame,
-    bloom: DataFrame | None,
+    filt: SeenFilter | None,
     hash_col: str = "url_hash",
     url_col: str | None = None,
-    bloom_buckets: int | None = None,
     keep: list | None = None,
 ) -> DataFrame:
     """Adds ``is_seen`` boolean: exact membership of batch[hash_col] in seen.
 
-    Bloom-negative rows bypass the join (provably new); bloom-positive rows are
-    confirmed with a left-semi/anti join pair expressed as a left join on the
-    deduplicated seen keys — one shuffle over only the candidate subset.
+    Every row goes through one left join against the deduplicated seen
+    keys; the prefilter's answer (``_maybe``) is part of the join
+    condition. A filter-positive row is confirmed or refuted by the join; a
+    filter-negative row cannot match and comes out new — but it is still
+    joined (the plan joins the whole batch against the whole seen table;
+    routing only filter-positive hashes into the confirm is an open
+    performance item).
 
-    ``bloom`` is the prefilter *DataFrame* straight from the warehouse (a
-    ``bitmap`` column means Bloom, a ``table`` column means cuckoo), probed
-    bucket-routed (bloom_probe_routed / cuckoo_probe_routed; pass
-    ``bloom_buckets``) — the filter is never collected or broadcast. With
-    ``None`` (no filter committed yet) every row goes to the exact confirm.
+    ``filt`` is the committed filter (committed_filter), probed
+    bucket-routed with its own geometry (routed_probe) — never collected
+    or broadcast. With ``None``, or no committed rows, ``_maybe`` is true
+    for every row.
 
     With a filter the batch subtree feeds TWO consumers (the distinct probe
     keys and the join's left side), so it is persisted here; the handle is
@@ -486,24 +462,19 @@ def split_new_vs_seen(
         url_col = "curl" if "curl" in batch.columns else (
             "url" if "url" in batch.columns and "url" in seen.columns else None
         )
-    if bloom is None:
+    if filt is None or filt.df is None:
         maybe = batch.withColumn("_maybe", F.lit(True))
     else:
-        assert bloom_buckets, "bloom_buckets required for the routed probe"
         batch = batch.persist()
         if keep is not None:
             keep.append(batch)
-        routed = cuckoo_probe_routed if "table" in bloom.columns else bloom_probe_routed
-        probed = routed(
-            batch.select(F.col(hash_col).alias("_ph")).distinct(),
-            bloom,
-            bloom_buckets,
-            "_ph",
+        probed = routed_probe(
+            batch.select(F.col(hash_col).alias("_ph")).distinct(), filt, "_ph"
         )
         maybe = (
             batch.join(probed, F.col(hash_col) == F.col("_ph"), "left")
             # every batch hash is in probed; True only as a safe fallback
-            # (falls into the exact confirm, never skips it)
+            # (keeps the row matchable by the exact confirm)
             .withColumn("_maybe", F.coalesce(F.col("maybe"), F.lit(True)))
             .drop("_ph", "maybe")
         )
@@ -516,68 +487,6 @@ def split_new_vs_seen(
     joined = maybe.join(seen_keys, cond, "left")
     return joined.withColumn("is_seen", F.col("_seen_hash").isNotNull()).drop(
         "_maybe", "_seen_hash", *(["_seen_url"] if url_col is not None else [])
-    )
-
-
-def distributed_bloom_update(
-    new_hashes: DataFrame,
-    prev_bloom: DataFrame | None,
-    bits: int,
-    k: int,
-    n_buckets: int,
-    hash_col: str = "url_hash",
-) -> DataFrame:
-    """Executor-side Bloom build: per-bucket bitmap OR-aggregation.
-
-    The driver never touches url hashes — each bucket's group (this round's
-    hashes routed by ``url_hash & (n_buckets-1)``, cogrouped with the bucket's
-    previous bitmap row) ORs its bits inside one Arrow-batched task. At 10^10
-    URLs this is one shuffle of the new hashes plus n_buckets tiny bitmap rows;
-    output is a BLOOM-schema frame (one row per touched bucket).
-
-    ``n_buckets`` must be a power of two so the signed bitwise-AND bucket key
-    matches the uint64 modulo PartitionedBloom uses internally.
-    """
-    if n_buckets & (n_buckets - 1):
-        raise ValueError(f"n_buckets must be a power of two, got {n_buckets}")
-    from . import schemas
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    hb = new_hashes.select(
-        F.col(hash_col).bitwiseAND(F.lit(n_buckets - 1)).cast("int").alias("bucket"),
-        F.col(hash_col).alias("h"),
-    )
-    prev = (
-        prev_bloom.select("bucket", "bitmap")
-        if prev_bloom is not None
-        else spark.createDataFrame([], schemas.BLOOM).select("bucket", "bitmap")
-    )
-
-    def merge(key, new_pdf: pd.DataFrame, prev_pdf: pd.DataFrame) -> pd.DataFrame:
-        bucket = int(key[0])
-        if len(prev_pdf):
-            bl = PartitionedBloom.from_rows(
-                [(bucket, prev_pdf["bitmap"].iloc[0], bits, k, n_buckets)]
-            )
-        else:
-            bl = PartitionedBloom(bits, k, n_buckets)
-        if len(new_pdf):
-            bl.add(new_pdf["h"].to_numpy(dtype=np.int64))
-        return pd.DataFrame(
-            {
-                "bucket": [bucket],
-                "bitmap": [bl._bitmap(bucket).tobytes()],
-                "bits": [bits],
-                "k": [k],
-                "n_buckets": [n_buckets],
-            }
-        )
-
-    return (
-        hb.groupBy("bucket")
-        .cogroup(prev.groupBy("bucket"))
-        .applyInPandas(merge, schemas.BLOOM)
     )
 
 
@@ -605,38 +514,55 @@ def _cumsum_offsets(counts: DataFrame, sums: list[tuple[str, str]]) -> DataFrame
     )
 
 
-def dense_rank_range(
+def rank_and_key(
     df: DataFrame,
     order_cols: list[str],
-    out_col: str = "seq",
-    offset: int = 0,
+    fetched_col: str = "is_fetched",
+    key_offset: int = 0,
     keep: list | None = None,
-    small_threshold: int = 2_000_000,
+    small_threshold: int = 100_000,
 ) -> DataFrame:
-    """Dense 1-based global numbering by a strict total order, skew-robust.
+    """Fused global numbering by a strict total order, skew-robust: one range
+    shuffle produces BOTH the crawl-order ``seq`` (dense 1-based over all
+    rows) and the dense ``surrogate_key`` over the fetched subset
+    (first-seen order), continuing from ``key_offset``. Over an all-true
+    ``fetched_col`` the two are one dense rank, ``surrogate_key`` offset.
 
     ADAPTIVE (the AQE idea applied to ranking): the input is persisted and
     counted first — one job that the range path would pay anyway through its
-    sampling pass. At or under ``small_threshold`` rows the rank is one
-    single-partition window (one task sorting ≤2M rows beats the 4-job
-    range machinery, whose pure scheduling cost measured 1.6-3.6 s on a
-    1.5k-row input); above it, range-repartition on the order columns
-    (balanced regardless of key skew), then per-partition row_number +
-    cumulative partition offsets. Partition boundaries come from sampling
-    and are not deterministic — but the output IS: ranks are fully
-    determined by the total order, and range partition i always precedes
-    partition j>i in that order. Requires the order to be strict (no ties),
-    which holds for crawl batches (curl is unique). Both paths produce
-    identical output (pinned by test_seen).
+    sampling pass. At or under ``small_threshold`` rows both numberings run
+    in one single-partition window (the 4-job range machinery costs seconds
+    of pure scheduling per crawl round on small batches); above it,
+    range-repartition on the order columns (balanced regardless of key
+    skew), then per-partition row_number + cumulative partition offsets.
+    The default threshold is low because the crawl round calls this on its
+    hot path, where a single-task sort of a bench-scale 800k-row batch
+    would serialize the round at high core counts (Amdahl).
+
+    Partition boundaries come from sampling and are not deterministic — but
+    the output IS: ranks are fully determined by the total order, and range
+    partition i always precedes partition j>i in that order. Requires the
+    order to be strict (no ties), which holds for crawl batches (curl is
+    unique). Both paths produce identical output (pinned by test_seen).
     """
     oc = [F.col(c).asc() for c in order_cols]
+    fint = F.col(fetched_col).cast("long")
     src = df.persist()
     if keep is not None:
         keep.append(src)
     if src.count() <= small_threshold:
         w_small = Window.orderBy(*oc)
-        return src.withColumn(
-            out_col, (F.row_number().over(w_small) + F.lit(offset)).cast("long")
+        return (
+            src.withColumn("seq", F.row_number().over(w_small).cast("long"))
+            .withColumn("_frn", F.sum(fint).over(w_small))
+            .withColumn(
+                "surrogate_key",
+                F.when(
+                    F.col(fetched_col),
+                    (F.col("_frn") + F.lit(key_offset)).cast("long"),
+                ),
+            )
+            .drop("_frn")
         )
     # persisted: the counts branch and the window branch MUST observe the same
     # (sampled, hence nondeterministic) range boundaries — the cache pins them
@@ -648,79 +574,12 @@ def dense_rank_range(
     )
     if keep is not None:
         keep.append(d)
-    counts = d.groupBy("_pid").count()
-    # cumulative offsets via a triangular self-join over the TINY partition-
-    # count frame (≤ n_shuffle_partitions rows): no unpartitioned window, so
-    # nothing ever moves "all data to a single partition" — not even the
-    # bounded metadata frame
-    offsets = _cumsum_offsets(counts, [("count", "_off")])
-    w_local = Window.partitionBy("_pid").orderBy(*oc)
-    out = (
-        d.withColumn("_rn", F.row_number().over(w_local))
-        .join(F.broadcast(offsets), "_pid")
-        .withColumn(out_col, (F.col("_rn") + F.col("_off") + F.lit(offset)).cast("long"))
-        .drop("_pid", "_rn", "_off")
-    )
-    return out
-
-
-def rank_and_key(
-    df: DataFrame,
-    order_cols: list[str],
-    fetched_col: str = "is_fetched",
-    key_offset: int = 0,
-    keep: list | None = None,
-    small_threshold: int = 100_000,
-) -> DataFrame:
-    """Fused global numbering: one range shuffle produces BOTH the crawl-order
-    ``seq`` (dense over all rows) and the dense ``surrogate_key`` over the
-    fetched subset (first-seen order), continuing from ``key_offset``.
-
-    Same exactness/skew properties as dense_rank_range; halves the per-round
-    shuffle + plan-compile cost of the two separate rankings.
-
-    ADAPTIVE like dense_rank_range, but with a LOWER default threshold: the
-    input is persisted and counted (a job the range path pays anyway via its
-    sampling pass); at or under ``small_threshold`` rows both numberings run
-    in one single-partition window — the 4-job range machinery costs seconds
-    of pure scheduling per crawl round on small/local batches. The threshold
-    is deliberately far below dense_rank_range's 2M: rank_and_key sits on
-    the PER-ROUND crawl hot path, and a single-task sort of a bench-scale
-    800k-row batch would serialize the round at high core counts (Amdahl).
-    Both paths produce identical output (pinned by test_seen).
-    """
-    oc = [F.col(c).asc() for c in order_cols]
-    fint0 = F.col(fetched_col).cast("long")
-    src = df.persist()
-    if keep is not None:
-        keep.append(src)
-    if src.count() <= small_threshold:
-        w_small = Window.orderBy(*oc)
-        return (
-            src.withColumn("seq", F.row_number().over(w_small).cast("long"))
-            .withColumn("_frn", F.sum(fint0).over(w_small))
-            .withColumn(
-                "surrogate_key",
-                F.when(
-                    F.col(fetched_col),
-                    (F.col("_frn") + F.lit(key_offset)).cast("long"),
-                ),
-            )
-            .drop("_frn")
-        )
-    d = (
-        src.repartitionByRange(*oc)
-        .sortWithinPartitions(*oc)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    if keep is not None:
-        keep.append(d)
-    fint = F.col(fetched_col).cast("long")
     counts = d.groupBy("_pid").agg(
         F.count("*").alias("_n"), F.sum(fint).alias("_nf")
     )
-    # triangular-join cumsum over the tiny counts frame (see dense_rank_range)
+    # cumulative offsets via a triangular self-join over the TINY partition-
+    # count frame (≤ n_shuffle_partitions rows): no unpartitioned window, so
+    # nothing ever moves all data to a single partition
     offsets = _cumsum_offsets(counts, [("_n", "_off"), ("_nf", "_foff")])
     w_local = Window.partitionBy("_pid").orderBy(*oc)
     out = (

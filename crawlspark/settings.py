@@ -18,7 +18,6 @@ from typing import Any
 
 @dataclass
 class GeneralSettings:
-    log_file: str = "crawlspark.log"
     debug: bool = False
 
 
@@ -32,11 +31,9 @@ class DebugSettings:
 
 @dataclass
 class AbcdSettings:
-    fields_file: str = "tests/fixtures/field_spec.json"
     landing_page_field: str = (
         "/DataSets/DataSet/Metadata/Description/Representation/URI"
     )
-    storage_dir: str = "raw_data"
 
 
 @dataclass
@@ -47,6 +44,8 @@ class CrawlSettings:
     budget_override: int | None = None  # bulk/bench mode: ignore robots budgets
     max_retries: int = 1                # fetch-miss re-enqueue attempts (src/main.rs:190-203 analog)
     max_rounds: int = 64
+    # seen prefilter kind and sizing below apply only to a filter that does
+    # not exist yet: a committed filter keeps its own (seen.committed_filter)
     bloom_bits: int = 1 << 20           # per-bucket bloom sizing (scaled up at 10^10)
     bloom_hashes: int = 5
     # hash-range partitions of the seen prefilter: the probe cogroups each
@@ -81,22 +80,11 @@ class CrawlSettings:
 
 
 @dataclass
-class WarehouseSettings:
-    path: str = "warehouse"
-    dataset_table: str = "abcd_datasets"            # settings-default.toml:29
-    unit_table: str = "abcd_units"                  # settings-default.toml:36
-    translation_suffix: str = "_translation"
-    listing_view: str = "dataset_listing"           # settings-default.toml:38
-    surrogate_key_column: str = "surrogate_key"     # settings-default.toml:31
-
-
-@dataclass
 class Settings:
     general: GeneralSettings = field(default_factory=GeneralSettings)
     debug: DebugSettings = field(default_factory=DebugSettings)
     abcd: AbcdSettings = field(default_factory=AbcdSettings)
     crawl: CrawlSettings = field(default_factory=CrawlSettings)
-    warehouse: WarehouseSettings = field(default_factory=WarehouseSettings)
 
     @classmethod
     def new(cls, path: str | Path | None = None, overrides: dict | None = None) -> "Settings":

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from . import schemas
 from .scheduler import enrich
-from .seen import split_new_vs_seen
+from .seen import committed_filter, split_new_vs_seen
 from .warehouse import Warehouse
 
 
@@ -81,8 +81,6 @@ def discovered_urls_stream(
     robots: DataFrame,
     checkpoint_dir: str,
     out_table: str = "discovered",
-    filter_table: str | None = "bloom",
-    bloom_buckets: int = 32,
 ):
     """Continuously ingest frontier drops → canonical, robots-filtered,
     unseen urls appended to the warehouse (micro-batch via foreachBatch so
@@ -92,10 +90,10 @@ def discovered_urls_stream(
     committed ``out_table`` append (a URL arriving in two drops lands once;
     the stream never writes 'seen', so the prior-appends anti-join is what
     makes the output-unique property hold across micro-batches). When the
-    warehouse carries a prefilter state table (``filter_table``, written by
-    the batch crawl loop), the seen confirm takes the same bucket-routed
-    probe as the batch rounds; without one it falls back to the exact join
-    (streaming-only deployments with an empty seen set pay nothing).
+    warehouse carries a committed prefilter (written by the batch crawl
+    loop), the seen confirm takes the same bucket-routed probe as the batch
+    rounds, with the filter's own kind and geometry (seen.committed_filter);
+    without one it is the exact join alone.
 
     A ``commit_round`` returning False is checked against the manifest: a
     redelivered batch whose round already carries ``out_table`` is the
@@ -124,11 +122,6 @@ def discovered_urls_stream(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         seen = warehouse.read_state(spark, "seen", schemas.SEEN)
-        bloom = (
-            warehouse.read_state(spark, filter_table)
-            if filter_table and warehouse.has_table(filter_table)
-            else None
-        )
         b = enrich(batch_df)
         rb = robots.select("host", "disallow_prefixes")
         b = b.join(F.broadcast(rb), b["chost"] == rb["host"], "left").drop(rb["host"])
@@ -139,7 +132,7 @@ def discovered_urls_stream(
             )
         )
         b = split_new_vs_seen(
-            b, seen, bloom, bloom_buckets=bloom_buckets
+            b, seen, committed_filter(spark, warehouse)
         ).filter(~F.col("is_seen"))
         # cross-batch dedup: URLs already committed by EARLIER micro-batches
         # (the stream never folds its output into 'seen'). The committed

@@ -1724,7 +1724,7 @@ def pack_sequences(
     sequences groups by ``seq_index`` downstream; this operator computes the
     assignment, which is the distributed-hard part (a global prefix sum).
 
-    Scale shape — the dense_rank_range pattern applied to SUMS: adaptive
+    Scale shape — the seen.rank_and_key pattern applied to SUMS: adaptive
     single-window fast path at/below ``small_threshold`` docs, else
     range-repartition by doc_id + per-partition running sum + exclusive
     partition offsets from the triangular metadata join

@@ -196,10 +196,8 @@ class Warehouse:
             if round_ not in t["rounds"]:
                 t["rounds"].append(round_)
 
-        import time as _time
         from concurrent.futures import ThreadPoolExecutor
 
-        timing = os.environ.get("CRAWLSPARK_TIMING") == "1"
         # (name, df, the state table's live list after this round; None for
         # an append)
         jobs = [(name, df, [round_]) for name, df in (snapshots or {}).items()]
@@ -217,7 +215,6 @@ class Warehouse:
 
         def write_one(job):
             name, df, live = job
-            t0 = _time.time()
             final = self._round_dir(name, round_)
             staging = final.parent / f"_staging_r{round_:06d}"
             if staging.exists():
@@ -227,10 +224,6 @@ class Warehouse:
             if final.exists():  # crashed post-rename pre-manifest: replace
                 shutil.rmtree(final)
             os.rename(staging, final)
-            if timing:
-                import sys as _sys
-
-                _sys.stderr.write(f"[timing commit] {name}: {_time.time() - t0:.2f}s\n")
             return name, final, live
 
         if len(jobs) > 1:
@@ -248,7 +241,7 @@ class Warehouse:
                 t["live"] = live
             if live is not None or name in stats_cols:
                 t.setdefault("stats", {})[str(round_)] = self._footer_stats(
-                    final, stats_cols.get(name, [])
+                    [final], stats_cols.get(name, [])
                 )
         m["last_round"] = round_
         self._write_manifest(m)
@@ -257,19 +250,19 @@ class Warehouse:
     def _rows(self, name: str, t: dict, round_: int) -> int:
         st = t.get("stats", {}).get(str(round_))
         if st is None:  # a directory committed before row counts were recorded
-            st = self._footer_stats(self._round_dir(name, round_), [])
+            st = self._footer_stats([self._round_dir(name, round_)], [])
         return st["rows"]
 
     @staticmethod
-    def _footer_stats(table_dir: Path, cols: list[str]) -> dict:
-        """Row count (+ per-column min/max for ``cols``) from parquet footers
-        only."""
+    def _footer_stats(table_dirs: list[Path], cols: list[str]) -> dict:
+        """Row count (+ per-column min/max for ``cols``) of the parquet files
+        in ``table_dirs``, from their footers only."""
         import pyarrow.parquet as pq
 
         rows = 0
         mins: dict[str, object] = {}
         maxs: dict[str, object] = {}
-        for part in sorted(table_dir.glob("*.parquet")):
+        for part in sorted(p for d in table_dirs for p in d.glob("*.parquet")):
             md = pq.ParquetFile(part).metadata
             rows += md.num_rows
             names = {md.schema.column(i).name: i for i in range(md.num_columns)}
@@ -335,6 +328,13 @@ class Warehouse:
             assert schema is not None, f"no snapshot for {name} and no schema"
             return SparkSession.getActiveSession().createDataFrame([], schema)
         return self._read_rounds(spark, name, live)
+
+    def state_stats(self, name: str, cols: list[str]) -> dict:
+        """Row count and per-column min/max of a state table's committed
+        contents, from the parquet footers of its live directories (no
+        Spark job)."""
+        live = self._live(self.manifest()["tables"].get(name))
+        return self._footer_stats([self._round_dir(name, r) for r in live], cols)
 
     def read_appends(
         self, spark: SparkSession, name: str, schema: StructType | None = None

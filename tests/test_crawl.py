@@ -351,6 +351,50 @@ def test_discovery_crawl_follows_links(spark, tmp_path):
     assert [u for _, _, u in log] == urls
 
 
+def test_resume_keeps_committed_filter_geometry(spark, tmp_path):
+    """A committed filter owns its geometry: a link-cycle discovery crawl
+    resumed after round 1 with ``seen_buckets: 2`` (the filter was built
+    with the default 32) still probes and updates it with 32 buckets, so
+    every back-link to a fetched page is dup_seen. Each url is fetched
+    once, and the crawl_log and seen set equal an unresumed run's."""
+    import datetime
+
+    urls = [f"https://site.example/p/{i}" for i in range(5)]
+    ts = datetime.datetime(2024, 1, 1)
+
+    def html(i):  # every earlier page (back-links) + the next one
+        links = urls[:i] + urls[i + 1 : i + 2]
+        return bytearray("".join(f'<a href="{u}">x</a>' for u in links).encode())
+
+    pages = spark.createDataFrame(
+        [(u, ts, html(i), None, None) for i, u in enumerate(urls)], schemas.PAGES
+    )
+    frontier = spark.createDataFrame(
+        [(urls[0], "site.example", 0, ts, "seed", 0, 0)], schemas.FRONTIER
+    )
+    robots = spark.createDataFrame([], schemas.ROBOTS)
+
+    def crawl(wh_dir, max_rounds=None, **crawl_overrides):
+        settings = Settings.new(overrides={"crawl": {
+            "discover_links": True, "max_retries": 0, **crawl_overrides,
+        }})
+        wh = Warehouse(wh_dir)
+        results = Crawler(
+            spark, settings, wh, synth.golden_fields(), pages, robots, frontier
+        ).run(max_rounds=max_rounds)
+        return wh, results
+
+    wh_full, _ = crawl(tmp_path / "full")
+    _, res1 = crawl(tmp_path / "resumed", max_rounds=2)
+    wh, res2 = crawl(tmp_path / "resumed", seen_buckets=2)
+    assert [r.round for r in res1] == [0, 1]
+    assert sum(r.fetched for r in res1 + res2) == len(urls)
+    log, seen, _ = collect_state(spark, wh)
+    assert [u for _, _, u in log] == urls  # each url once, in chain order
+    log_full, seen_full, _ = collect_state(spark, wh_full)
+    assert (log, seen) == (log_full, seen_full)
+
+
 def test_trap_detect_derates_flagged_host_budget(spark, tmp_path):
     """crawl.trap_detect: a host whose candidate URLs look like traps
     (repeated segments) gets its politeness budget divided; the clean host

@@ -9,7 +9,7 @@ import zipfile
 from pyspark.sql import functions as F
 
 from crawlspark import synth
-from crawlspark.extract import parse_abcd, extract_pages, split_dataset_units, xml_events
+from crawlspark.extract import parse_abcd, extract_pages, split_dataset_units
 from crawlspark.fields import AbcdFields
 from crawlspark.synth import GOLDEN_SPEC, LANDING_PAGE_FIELD
 
@@ -20,6 +20,77 @@ UNIT_ID = "UNIT ID"
 UNIT_LONGITUDE = 10.911
 UNIT_LATITUDE = 49.911
 UNIT_SPATIAL_DATUM = "TECHNICAL WGS84 EMAIL"
+
+
+def xml_events(data: bytes):
+    """quick-xml-compatible event stream: (kind, payload, attrs) triples,
+    kind ∈ {'start','end','text'} — the parity mirror of the scan loop
+    inlined in ``parse_abcd``.
+
+    Start/End carry the namespace-stripped tag name; Text carries the RAW
+    (escaped, trimmed) bytes. Start events additionally carry the raw
+    attribute byte-span of the tag (``b""`` for end/text) so callers can
+    sniff attributes — the reference reads them exactly once, for the ABCD
+    version (abcd_parser.rs:62-78). Comments, PIs, DOCTYPE, CDATA and
+    self-closing tags emit nothing (reference ignores those events).
+    """
+    n = len(data)
+    i = 0
+    find = data.find  # bound method, as in parse_abcd's inlined loop
+    while i < n:
+        j = find(b"<", i)
+        if j < 0:
+            break
+        if j > i:
+            text = data[i:j].strip(b" \t\r\n")
+            if text:
+                yield ("text", text, b"")
+        # single-character dispatch on the byte after '<' (replaces five
+        # chained startswith probes per tag — same classification: '/'⇒end,
+        # '!'⇒comment/CDATA/DOCTYPE, '?'⇒PI, else start tag; an EOF '<' has
+        # c == b'' and falls through to the start branch's find/break
+        # exactly like the startswith chain did)
+        c = data[j + 1 : j + 2]
+        if c == b"/":
+            k = find(b">", j + 2)
+            if k < 0:
+                break
+            name = data[j + 2 : k].strip(b" \t\r\n")
+            ci = name.find(b":")
+            if ci >= 0:  # namespace strip (abcd_parser.rs:174-179), inlined
+                name = name[ci + 1 :]
+            yield ("end", name, b"")
+            i = k + 1
+        elif c == b"!":
+            if data.startswith(b"<!--", j):
+                k = find(b"-->", j + 4)
+                i = n if k < 0 else k + 3
+            elif data.startswith(b"<![CDATA[", j):
+                k = find(b"]]>", j + 9)
+                i = n if k < 0 else k + 3
+            else:
+                k = find(b">", j + 2)
+                i = n if k < 0 else k + 1
+        elif c == b"?":
+            k = find(b"?>", j + 2)
+            i = n if k < 0 else k + 2
+        else:
+            k = find(b">", j + 1)
+            if k < 0:
+                break
+            inner = data[j + 1 : k]
+            if inner.endswith(b"/"):
+                i = k + 1  # self-closing == quick-xml Event::Empty, ignored
+                continue
+            parts = inner.split(None, 1)
+            name = parts[0] if parts else inner
+            attrs = parts[1] if len(parts) > 1 else b""
+            ci = name.find(b":")
+            if ci >= 0:
+                name = name[ci + 1 :]
+            yield ("start", name, attrs)
+            i = k + 1
+    # trailing text after the last tag is ignored (EOF)
 
 
 def golden_xml() -> bytes:

@@ -172,3 +172,16 @@ def test_write_gpkg_true_overwrite(spark, tmp_path):
     layers = {r[0] for r in con.execute("SELECT table_name FROM gpkg_contents")}
     con.close()
     assert layers == {"layer_c"}
+
+
+def test_write_gpkg_keeps_caller_cache(spark, tmp_path):
+    """write_gpkg drops only a cache it made itself: a DataFrame the caller
+    persisted is still cached after the export."""
+    df = spark.createDataFrame([(10.5, 49.25, 3)], ["lon", "lat", "n"]).persist()
+    try:
+        assert df.count() == 1
+        assert write_gpkg(df, str(tmp_path / "c.gpkg")) == 1
+        lvl = df.storageLevel
+        assert lvl.useMemory or lvl.useDisk
+    finally:
+        df.unpersist()

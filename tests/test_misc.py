@@ -99,6 +99,44 @@ def test_streaming_discovery(spark, tmp_path):
     assert sorted(map(tuple, out2)) == sorted(map(tuple, out))
 
 
+def test_streaming_probes_committed_filter_geometry(spark, tmp_path):
+    """The stream probes the crawl's committed filter with the filter's own
+    bucket count. A crawl round built a 2-bucket filter; a drop that
+    re-lists every fetched url must land none of them in ``discovered``
+    (probed as 32 buckets, most would route to partitions with no row,
+    come back filter-negative and skip the exact confirm)."""
+    import time
+
+    from crawlspark import schemas, synth
+    from crawlspark.scheduler import Crawler
+    from crawlspark.streaming import discovered_urls_stream
+    from crawlspark.warehouse import Warehouse
+
+    n, n_hosts = 40, 5
+    frontier = spark.createDataFrame(synth.frontier_rows(n, n_hosts), schemas.FRONTIER)
+    robots = spark.createDataFrame(synth.robots_rows(n_hosts), schemas.ROBOTS)
+    pages = spark.createDataFrame(
+        [synth.page_row(i, n_hosts) for i in range(n)], schemas.PAGES
+    )
+    wh = Warehouse(tmp_path / "wh")
+    Crawler(
+        spark, Settings.new(overrides={"crawl": {"seen_buckets": 2}}), wh,
+        synth.golden_fields(), pages, robots, frontier,
+    ).run(max_rounds=1)
+    fetched = [r["url"] for r in wh.read_state(spark, "seen").collect()]
+    assert len(fetched) >= 10
+
+    drop = str(tmp_path / "in" / "d1")
+    spark.createDataFrame(
+        [(u, None, 0, None, "relist", 0, 0) for u in fetched], schemas.FRONTIER
+    ).write.parquet(drop)
+    q = discovered_urls_stream(spark, drop, wh, robots, str(tmp_path / "ckpt"))
+    q.awaitTermination(120)
+    time.sleep(0.5)
+    assert wh.has_table("discovered")
+    assert wh.read_appends(spark, "discovered").collect() == []
+
+
 def test_stateful_host_stream(spark, tmp_path):
     """applyInPandasWithState: per-host counters accumulate across
     micro-batches AND across a stream restart (state from the checkpoint)."""

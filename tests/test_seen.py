@@ -1,10 +1,28 @@
-"""Seen-set machinery: bloom routing (never drops), dense numbering."""
+"""Seen-set machinery: prefilters (no false negatives), the routed probe
+and update, the exact confirm, dense numbering."""
 
 import numpy as np
+import pytest
 
 from pyspark.sql import functions as F
 
-from crawlspark.seen import PartitionedBloom, dense_rank_range, split_new_vs_seen
+from crawlspark.seen import (
+    PartitionedBloom,
+    PartitionedCuckoo,
+    SeenFilter,
+    rank_and_key,
+    routed_probe,
+    routed_update,
+    split_new_vs_seen,
+)
+
+
+def _built(spark, shape, hashes):
+    """SeenFilter of ``shape`` holding ``hashes`` (a ``url_hash`` column),
+    built by routed_update and materialized once, so every probe sees
+    identical state."""
+    rows = routed_update(hashes, SeenFilter(shape)).collect()
+    return SeenFilter(shape, spark.createDataFrame(rows, shape.schema))
 
 
 def test_bloom_no_false_negatives():
@@ -32,8 +50,6 @@ def test_bloom_roundtrip_serialization():
 
 
 def test_split_new_vs_seen_exact(spark):
-    from crawlspark.seen import distributed_bloom_update
-
     batch = spark.createDataFrame(
         [(i, f"u{i}") for i in range(20)], ["url_hash", "url"]
     )
@@ -41,10 +57,10 @@ def test_split_new_vs_seen_exact(spark):
         [(i, f"u{i}", i, 0) for i in range(0, 20, 2)],
         ["url_hash", "url", "surrogate_key", "first_round"],
     )
-    bloom_df = distributed_bloom_update(seen.select("url_hash"), None, 1 << 10, 3, 2)
+    bloom = _built(spark, PartitionedBloom(1 << 10, 3, 2), seen.select("url_hash"))
     out = {
         r["url_hash"]: r["is_seen"]
-        for r in split_new_vs_seen(batch, seen, bloom_df, bloom_buckets=2).collect()
+        for r in split_new_vs_seen(batch, seen, bloom).collect()
     }
     assert all(out[i] == (i % 2 == 0) for i in range(20))
     # and without bloom (exact-only path)
@@ -52,34 +68,26 @@ def test_split_new_vs_seen_exact(spark):
     assert out == out2
 
 
-def test_routed_probe_matches_local(spark):
+@pytest.mark.parametrize("shape", [
+    PartitionedBloom(1 << 12, 3, 8),
+    PartitionedCuckoo(1 << 10, 4, 8),
+], ids=["bloom", "cuckoo"])
+def test_routed_probe_matches_local(spark, shape):
     """Bucket-routed cogroup probe == local might_contain, bit for bit
-    (same positions, same bitmaps; only the transport differs)."""
-    from crawlspark import schemas
-    from crawlspark.seen import bloom_probe_routed, distributed_bloom_update
-
-    n_buckets, bits, k = 8, 1 << 12, 3
+    (same positions, same partitions; only the transport differs), for
+    both filter kinds."""
     added = spark.range(500).select(
         F.xxhash64(F.col("id").cast("string")).alias("url_hash")
     )
-    bloom_df = distributed_bloom_update(added, None, bits, k, n_buckets)
-    # materialize once so both probes see identical state
-    rows = bloom_df.collect()
-    bloom_df = spark.createDataFrame(rows, schemas.BLOOM)
-    bl = PartitionedBloom.from_rows(
-        [(r["bucket"], r["bitmap"], r["bits"], r["k"], r["n_buckets"]) for r in rows]
-    )
+    filt = _built(spark, shape, added)
+    local = type(shape).from_rows([tuple(r) for r in filt.df.collect()])
 
     probe_keys = spark.range(2000).select(
         F.xxhash64(F.col("id").cast("string")).alias("h")
     )
-    routed = {
-        r["h"]: r["maybe"]
-        for r in bloom_probe_routed(probe_keys, bloom_df, n_buckets).collect()
-    }
+    routed = {r["h"]: r["maybe"] for r in routed_probe(probe_keys, filt).collect()}
     hs = np.array(sorted(routed), dtype=np.int64)
-    local = dict(zip(hs.tolist(), bl.might_contain(hs).tolist()))
-    assert routed == local
+    assert routed == dict(zip(hs.tolist(), local.might_contain(hs).tolist()))
     # every added hash must still report possibly-seen (no false negatives)
     assert all(routed[r["h"]] for r in added.select(F.col("url_hash").alias("h")).collect())
 
@@ -98,20 +106,15 @@ def test_split_new_vs_seen_routed_df(spark):
     bloom_df = distributed_bloom_update(
         seen.select("url_hash"), None, 1 << 10, 3, 4
     )
+    filt = SeenFilter(PartitionedBloom(1 << 10, 3, 4), bloom_df)
     out = {
         r["url_hash"]: r["is_seen"]
-        for r in split_new_vs_seen(batch, seen, bloom_df, bloom_buckets=4).collect()
+        for r in split_new_vs_seen(batch, seen, filt).collect()
     }
     assert all(out[i] == (i % 2 == 0) for i in range(20))
 
 
-def _ranks(rows):
-    return {r["k"]: r["seq"] for r in rows}
-
-
 def test_rank_and_key_fused(spark):
-    from crawlspark.seen import rank_and_key
-
     data = [(f"h{i % 5}", i % 3, i % 2 == 0, f"k{i:03d}") for i in range(57)]
     df = spark.createDataFrame(data, ["host", "priority", "is_fetched", "k"])
     out = {r["k"]: (r["seq"], r["surrogate_key"])
@@ -128,10 +131,15 @@ def test_rank_and_key_fused(spark):
 
 
 def test_dense_rank_variants_agree(spark):
+    """Over an all-true fetched column rank_and_key is one dense rank:
+    ``surrogate_key`` = ``seq`` + offset, 1-based, ordered by the order
+    columns (the surrogate-key query's use)."""
     data = [(f"h{i % 5}", i % 3, i, f"k{i:03d}") for i in range(97)]
     df = spark.createDataFrame(data, ["host", "priority", "i", "k"])
-    a = dense_rank_range(df, ["host", "priority", "k"], out_col="seq", offset=10)
-    ra = _ranks(a.collect())
+    a = rank_and_key(df.withColumn("is_fetched", F.lit(True)),
+                     ["host", "priority", "k"], key_offset=10).collect()
+    assert all(r["surrogate_key"] == r["seq"] + 10 for r in a)
+    ra = {r["k"]: r["surrogate_key"] for r in a}
     # dense, 1-based + offset, ordered by (host, priority, k)
     assert sorted(ra.values()) == list(range(11, 11 + 97))
     ordered = sorted(data, key=lambda t: (t[0], t[1], t[3]))
@@ -140,16 +148,20 @@ def test_dense_rank_variants_agree(spark):
 
 
 def test_dense_rank_adaptive_paths_identical(spark):
-    """The adaptive fast path (single window, input ≤ small_threshold) and
-    the range-partitioned path must produce IDENTICAL ranks — forced here by
-    running the same input through both thresholds."""
-    data = [(f"h{i % 7}", (i * 13) % 5, f"k{i:03d}") for i in range(211)]
-    df = spark.createDataFrame(data, ["host", "priority", "k"])
-    fast = dense_rank_range(df, ["host", "priority", "k"], out_col="seq",
-                            offset=3)                      # 211 ≤ default
-    ranged = dense_rank_range(df, ["host", "priority", "k"], out_col="seq",
-                              offset=3, small_threshold=0)  # force range path
-    assert _ranks(fast.collect()) == _ranks(ranged.collect())
+    """rank_and_key's adaptive fast path (single window, input ≤
+    small_threshold) and its range-partitioned path must produce IDENTICAL
+    seq and surrogate_key — forced here by running the same input through
+    both thresholds."""
+    data = [(f"h{i % 7}", (i * 13) % 5, i % 3 != 0, f"k{i:03d}") for i in range(211)]
+    df = spark.createDataFrame(data, ["host", "priority", "is_fetched", "k"])
+
+    def keyed(rows):
+        return {r["k"]: (r["seq"], r["surrogate_key"]) for r in rows}
+
+    order = ["host", "priority", "k"]
+    fast = rank_and_key(df, order, key_offset=3)                      # 211 ≤ default
+    ranged = rank_and_key(df, order, key_offset=3, small_threshold=0)  # force range path
+    assert keyed(fast.collect()) == keyed(ranged.collect())
 
 
 # ---------------------------------------------------------------------------
@@ -157,8 +169,6 @@ def test_dense_rank_adaptive_paths_identical(spark):
 # ---------------------------------------------------------------------------
 
 def test_cuckoo_add_probe_delete():
-    from crawlspark.seen import PartitionedCuckoo
-
     ck = PartitionedCuckoo(1 << 10, 4, 4)
     hs = np.arange(-500, 500, dtype=np.int64) * 2654435761
     ck.add(hs)
@@ -179,8 +189,6 @@ def test_cuckoo_colliding_keys_survive_delete():
     one must NOT clear the other — the filter stores one copy per key (Fan et
     al. 2014 duplication), so delete is exact for inserted keys. An idempotent
     add would share one stored copy and this would be a false negative."""
-    from crawlspark.seen import PartitionedCuckoo
-
     m, slots, nb = 1 << 4, 4, 1
     ck = PartitionedCuckoo(m, slots, nb)
     # scan for a colliding pair under the filter's own derivation
@@ -210,8 +218,6 @@ def test_cuckoo_colliding_keys_survive_delete():
 
 def test_cuckoo_kick_eviction_densely_packed():
     """Force relocation chains: tiny table at ~75% load still holds every key."""
-    from crawlspark.seen import PartitionedCuckoo
-
     ck = PartitionedCuckoo(1 << 6, 4, 1)  # 256 slots in one partition bucket
     hs = (
         np.arange(190, dtype=np.uint64) * np.uint64(0x9E3779B97F4A7C15)
@@ -221,8 +227,6 @@ def test_cuckoo_kick_eviction_densely_packed():
 
 
 def test_cuckoo_roundtrip_serialization():
-    from crawlspark.seen import PartitionedCuckoo
-
     ck = PartitionedCuckoo(1 << 8, 4, 4)
     hs = np.array([1, -7, 12345678901234, -99999999], dtype=np.int64)
     ck.add(hs)
@@ -233,55 +237,14 @@ def test_cuckoo_roundtrip_serialization():
     assert ck2.might_contain(hs[2:]).all()
 
 
-def test_cuckoo_routed_probe_matches_local(spark):
-    """Bucket-routed cuckoo cogroup probe == local might_contain."""
-    from crawlspark import schemas
-    from crawlspark.seen import (
-        PartitionedCuckoo,
-        cuckoo_probe_routed,
-        distributed_cuckoo_update,
-    )
-
-    n_buckets, m, slots = 8, 1 << 10, 4
-    added = spark.range(500).select(
-        F.xxhash64(F.col("id").cast("string")).alias("url_hash")
-    )
-    ck_df = distributed_cuckoo_update(added, None, m, slots, n_buckets)
-    rows = ck_df.collect()
-    ck_df = spark.createDataFrame(rows, schemas.CUCKOO)
-    ck = PartitionedCuckoo.from_rows(
-        [(r["bucket"], r["table"], r["m"], r["slots"], r["n_buckets"]) for r in rows]
-    )
-    probe_keys = spark.range(2000).select(
-        F.xxhash64(F.col("id").cast("string")).alias("h")
-    )
-    routed = {
-        r["h"]: r["maybe"]
-        for r in cuckoo_probe_routed(probe_keys, ck_df, n_buckets).collect()
-    }
-    hs = np.array(sorted(routed), dtype=np.int64)
-    local = dict(zip(hs.tolist(), ck.might_contain(hs).tolist()))
-    assert routed == local
-    assert all(routed[r["h"]] for r in added.select(F.col("url_hash").alias("h")).collect())
-
-
 def test_cuckoo_distributed_delete(spark):
     """One cogroup applies deletes before adds; deleted keys route as new."""
-    from crawlspark import schemas
-    from crawlspark.seen import PartitionedCuckoo, distributed_cuckoo_update
-
-    n_buckets, m, slots = 4, 1 << 10, 4
     a = spark.range(300).select(F.xxhash64(F.col("id").cast("string")).alias("url_hash"))
-    ck_df = distributed_cuckoo_update(a, None, m, slots, n_buckets)
-    ck_df = spark.createDataFrame(ck_df.collect(), schemas.CUCKOO)
+    filt = _built(spark, PartitionedCuckoo(1 << 10, 4, 4), a)
     dels = spark.range(100).select(F.xxhash64(F.col("id").cast("string")).alias("url_hash"))
     empty = spark.createDataFrame([], "url_hash long")
-    ck_df2 = distributed_cuckoo_update(
-        empty, ck_df, m, slots, n_buckets, deleted_hashes=dels
-    )
-    ck = PartitionedCuckoo.from_rows(
-        [(r["bucket"], r["table"], r["m"], r["slots"], r["n_buckets"]) for r in ck_df2.collect()]
-    )
+    ck_df2 = routed_update(empty, filt, deleted_hashes=dels)
+    ck = PartitionedCuckoo.from_rows([tuple(r) for r in ck_df2.collect()])
     kept = np.array(
         [r["url_hash"] for r in a.subtract(dels).collect()], dtype=np.int64
     )
@@ -291,19 +254,17 @@ def test_cuckoo_distributed_delete(spark):
 
 
 def test_split_new_vs_seen_cuckoo(spark):
-    """split_new_vs_seen accepts the cuckoo filter table (a ``table``
-    column) and agrees with the exact-only path."""
-    from crawlspark.seen import distributed_cuckoo_update
-
+    """split_new_vs_seen takes the cuckoo filter through the same routed
+    probe and agrees with the exact-only path."""
     batch = spark.createDataFrame([(i, f"u{i}") for i in range(20)], ["url_hash", "url"])
     seen = spark.createDataFrame(
         [(i, f"u{i}", i, 0) for i in range(0, 20, 2)],
         ["url_hash", "url", "surrogate_key", "first_round"],
     )
-    ck_df = distributed_cuckoo_update(seen.select("url_hash"), None, 1 << 10, 4, 4)
+    ck = _built(spark, PartitionedCuckoo(1 << 10, 4, 4), seen.select("url_hash"))
     out = {
         r["url_hash"]: r["is_seen"]
-        for r in split_new_vs_seen(batch, seen, ck_df, bloom_buckets=4).collect()
+        for r in split_new_vs_seen(batch, seen, ck).collect()
     }
     assert all(out[i] == (i % 2 == 0) for i in range(20))
     out2 = {r["url_hash"]: r["is_seen"] for r in split_new_vs_seen(batch, seen, None).collect()}
@@ -313,10 +274,6 @@ def test_split_new_vs_seen_cuckoo(spark):
 def test_cuckoo_overfull_raises():
     """An over-capacity cuckoo bucket fails loudly (resize guidance), never
     silently drops a key (which would corrupt seen-set routing)."""
-    import pytest
-
-    from crawlspark.seen import PartitionedCuckoo
-
     ck = PartitionedCuckoo(2, 2, 1, max_kicks=50)  # 4 slots total
     hs = (np.arange(40, dtype=np.uint64) * np.uint64(0x9E3779B97F4A7C15)).view(np.int64)
     with pytest.raises(RuntimeError, match="full"):

@@ -146,28 +146,41 @@ def main() -> None:
            "ResolvedHint" not in analyzed)])
     )
 
-    # 10. distributed bloom build: executor-side cogroup, no driver collect
-    from crawlspark.seen import distributed_bloom_update
+    # 10. filter build: executor-side cogroup, no driver collect
+    from crawlspark.seen import (
+        PartitionedBloom, PartitionedCuckoo, SeenFilter, routed_probe, routed_update,
+    )
 
     hashes = spark.range(1000).select(F.xxhash64(F.col("id").cast("string")).alias("url_hash"))
-    q = distributed_bloom_update(hashes, None, 1 << 16, 5, 32)
-    p = fmt(q)
+    bloom = SeenFilter(PartitionedBloom(1 << 16, 5, 32))
+    bloom = bloom._replace(df=routed_update(hashes, bloom))
+    p = fmt(bloom.df)
     sections.append(
         ("Bloom build: per-bucket cogroup on executors", p,
          [("FlatMapCoGroupsInPandas operator", "FlatMapCoGroupsInPandas" in p)])
     )
 
-    # 11. routed bloom probe: per-bucket cogroup, no whole-filter broadcast
-    from crawlspark.seen import bloom_probe_routed
-
-    bloom_df = distributed_bloom_update(hashes, None, 1 << 16, 5, 32)
+    # 11. routed probe: per-bucket cogroup, no whole-filter broadcast
     keys = spark.range(500).select(F.xxhash64(F.col("id").cast("string")).alias("h"))
-    q = bloom_probe_routed(keys, bloom_df, 32)
+    q = routed_probe(keys, bloom)
     p = fmt(q)
     sections.append(
         ("Bloom probe (scale path): per-bucket cogroup, filter never broadcast", p,
          [("FlatMapCoGroupsInPandas operator", "FlatMapCoGroupsInPandas" in p),
           ("no broadcast of the bitmap table", "BroadcastExchange" not in p)])
+    )
+
+    # 11b. the filter's answer is a condition of the exact confirm join: the
+    #      whole batch is joined against the whole seen table, filter-negative
+    #      rows included (routing only positives into it is an open item)
+    batch = hashes.select("url_hash", F.concat(F.lit("u"), F.col("url_hash")).alias("url"))
+    q = split_new_vs_seen(batch, seen, bloom)
+    p = fmt(q)
+    sections.append(
+        ("Seen-set confirm with a prefilter: filter answer is a join condition", p,
+         [("routed probe cogroup present", "FlatMapCoGroupsInPandas" in p),
+          ("one outer join of the whole batch, conditioned on _maybe",
+           "LeftOuter" in p and "Join condition: _maybe" in p)])
     )
 
     # 12. batch k-NN join: per-query window (never a global single-partition
@@ -185,14 +198,14 @@ def main() -> None:
           ("query set broadcast", "BroadcastExchange" in p or "BroadcastNestedLoop" in p)])
     )
 
-    # 13. cuckoo build/probe (deletable seen filter): same per-bucket cogroup
-    #     shape as bloom — table never collected or broadcast
-    from crawlspark.seen import cuckoo_probe_routed, distributed_cuckoo_update
-
-    ck_df = distributed_cuckoo_update(hashes, None, 1 << 12, 4, 32)
-    p = fmt(ck_df)
+    # 13. cuckoo build/probe (deletable seen filter): the same routed_update
+    #     and routed_probe cogroups as bloom — table never collected or
+    #     broadcast
+    ck = SeenFilter(PartitionedCuckoo(1 << 12, 4, 32))
+    ck = ck._replace(df=routed_update(hashes, ck))
+    p = fmt(ck.df)
     checks = [("FlatMapCoGroupsInPandas operator", "FlatMapCoGroupsInPandas" in p)]
-    q = cuckoo_probe_routed(keys, ck_df, 32)
+    q = routed_probe(keys, ck)
     p2 = fmt(q)
     checks += [
         ("probe is a per-bucket cogroup", "FlatMapCoGroupsInPandas" in p2),
